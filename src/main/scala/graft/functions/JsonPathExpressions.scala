@@ -102,6 +102,11 @@ case class JsonPathExists(child: Expression, path: String)
   * same common-subexpression economy the reference gets by printing the JSON
   * once (TopologyProducer.kt:213) — and feeds `explode` for the multicast
   * (TopologyProducer.kt:97–105).
+  *
+  * Per rule, the cost is one [[JsonPathLite.exists]] walk that stops at the
+  * rule's first match and builds no node lists: a rule that matches early
+  * visits a few nodes, and only a rule that matches nothing visits all the
+  * nodes its path can reach.
   */
 case class JsonPathRoutes(
     child: Expression,

@@ -2,6 +2,7 @@ package graft.functions
 
 import com.fasterxml.jackson.databind.JsonNode
 
+import java.util.{Collections, IdentityHashMap}
 import java.util.regex.Pattern
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
@@ -58,6 +59,16 @@ import scala.jdk.CollectionConverters._
   *    calls `matcher.matches()`); non-strings never match;
   *  - `in [..]` / `nin [..]` test membership against literal lists.
   *
+  * Evaluation is one depth-first walk with two sinks. Each step hands every
+  * node it selects straight to the steps after it; a node that passes the
+  * last step goes to the sink. [[exists]]'s sink stops the walk at the first
+  * full match, so a rule costs the nodes visited until then and builds no
+  * per-step node lists; a deep scan returns as soon as the rest of the path
+  * matches. [[select]]'s sink collects every match in document order (the
+  * order of applying each step to the previous step's whole result).
+  * Operators, literals and regexes are resolved once by [[compile]], and
+  * definite filter operands (`@.a[0].b`) are read by walking straight down.
+  *
   * Evaluation never throws on well-formed compiled paths; `compile` throws
   * `JsonPathSyntaxException` on malformed input (callers isolate per rule,
   * mirroring the reference's per-rule runCatching).
@@ -110,25 +121,30 @@ object JsonPathLite {
   sealed trait Pred
   final case class Or(clauses: Seq[Pred]) extends Pred
   final case class And(terms: Seq[Pred]) extends Pred
-  final case class Cmp(path: Seq[Step], op: String, lit: Lit) extends Pred
-  final case class Exists(path: Seq[Step]) extends Pred
+  /** `path op lit`; `op` is an index into [[ops]], `path` is definite. */
+  final case class Cmp(path: Array[Step], op: Int, lit: Lit) extends Pred
+  final case class Exists(path: Array[Step]) extends Pred
+
+  /** Filter operators; a compiled [[Cmp]] holds the index. */
+  private val ops = Seq("==", "!=", "<", "<=", ">", ">=", "=~", "in", "nin")
+  private final val Eq = 0; private final val Ne = 1; private final val Lt = 2
+  private final val Le = 3; private final val Gt = 4; private final val Ge = 5
+  private final val Nin = 8
 
   sealed trait Lit
   final case class SLit(s: String) extends Lit
-  final case class NLit(n: BigDecimal) extends Lit
+  final case class NLit(n: java.math.BigDecimal) extends Lit
   final case class BLit(b: Boolean) extends Lit
   case object NullLit extends Lit
-  final case class RLit(regex: String, flags: Int) extends Lit {
-    @transient lazy val pattern: Pattern = Pattern.compile(regex, flags)
-  }
+  final case class RLit(pattern: Pattern) extends Lit
   final case class LLit(items: Seq[Lit]) extends Lit
   /** Root-path comparison operand — `[?(@.price <= $.expensive)]` (Jayway
     * bookstore example 8). Resolved against the ROOT document per
     * evaluation; must be a definite path (fields/indices only).
     */
-  final case class PathLit(steps: Seq[Step]) extends Lit
+  final case class PathLit(steps: Array[Step]) extends Lit
 
-  final case class Compiled(steps: Seq[Step])
+  final case class Compiled(steps: Array[Step])
 
   // ---------------------------------------------------------------- compile
 
@@ -280,7 +296,7 @@ object JsonPathLite {
       }
     }
 
-    Compiled(steps.toSeq)
+    Compiled(steps.toArray)
   }
 
   /** Parse the inside of `[?( ... )]`. */
@@ -352,7 +368,7 @@ object JsonPathLite {
             throw new JsonPathSyntaxException(s"'$op' needs a [list] literal in $whole")
           case _ => ()
         }
-        Cmp(parseRelPath(lhs, existsOk = false), op, lit)
+        Cmp(parseRelPath(lhs, existsOk = false), ops.indexOf(op), lit)
       }
     }
 
@@ -362,12 +378,12 @@ object JsonPathLite {
       * `@..name` deep scan is allowed only for existence terms (Jayway
       * rejects indefinite paths as comparison operands).
       */
-    def parseRelPath(p0: String, existsOk: Boolean): Seq[Step] = {
+    def parseRelPath(p0: String, existsOk: Boolean): Array[Step] = {
       val p = p0.trim
       if (!p.startsWith("@"))
         throw new JsonPathSyntaxException(s"filter path must start with '@': '$p' in $whole")
       val rest = p.substring(1)
-      if (rest.isEmpty) return Seq.empty
+      if (rest.isEmpty) return Array.empty
       val segs = ArrayBuffer.empty[Step]
       var j = 0
       while (j < rest.length) {
@@ -433,7 +449,7 @@ object JsonPathLite {
             throw new JsonPathSyntaxException(s"unexpected '$other' in filter path '$p'")
         }
       }
-      segs.toSeq
+      segs.toArray
     }
 
     def parseLiteral(l0: String, op: String): Lit = {
@@ -454,7 +470,7 @@ object JsonPathLite {
           case 's' => flags |= Pattern.DOTALL
           case c   => throw new JsonPathSyntaxException(s"unsupported regex flag '$c' in $whole")
         }
-        try { Pattern.compile(body, flags); RLit(body, flags) }
+        try RLit(Pattern.compile(body, flags))
         catch { case e: Exception =>
           throw new JsonPathSyntaxException(s"bad regex '$body' in $whole: ${e.getMessage}")
         }
@@ -508,7 +524,7 @@ object JsonPathLite {
         case "false" => BLit(false)
         case "null"  => NullLit
         case n =>
-          try NLit(BigDecimal(n))
+          try NLit(new java.math.BigDecimal(n))
           catch { case _: NumberFormatException => throw new JsonPathSyntaxException(s"bad literal '$l' in $whole") }
       }
     }
@@ -526,199 +542,181 @@ object JsonPathLite {
 
   /** All nodes the path selects, document order. Never throws. */
   def select(root: JsonNode, path: Compiled): Seq[JsonNode] = {
-    if (root == null || root.isMissingNode) return Seq.empty
-    var current: Seq[JsonNode] = Seq(root)
-    path.steps.foreach { step =>
-      if (current.isEmpty) return Seq.empty
-      current = current.flatMap(applyStep(root, _, step))
-    }
-    current
+    val out = ArrayBuffer.empty[JsonNode]
+    if (root != null && !root.isMissingNode)
+      new Eval(root, path.steps, n => { out += n; false }, collect = true).walk(0, root)
+    out.toSeq
   }
 
   /** Does the path select at least one node? (The reference's match test —
-    * TopologyProducer.kt:216–218.)
+    * TopologyProducer.kt:216–218.) Stops at the first full match.
     */
-  def exists(root: JsonNode, path: Compiled): Boolean = {
-    if (root == null || root.isMissingNode) return false
-    var current: Seq[JsonNode] = Seq(root)
-    path.steps.foreach { step =>
-      if (current.isEmpty) return false
-      current = current.flatMap(applyStep(root, _, step))
+  def exists(root: JsonNode, path: Compiled): Boolean =
+    root != null && !root.isMissingNode && existsFrom(root, root, path.steps)
+
+  private def existsFrom(root: JsonNode, node: JsonNode, steps: Array[Step]): Boolean =
+    new Eval(root, steps, _ => true, collect = false).walk(0, node)
+
+  /** One depth-first evaluation of `steps`. `walk(k, n)` runs steps k.. on
+    * node n; each step passes every node it selects on to `walk(k + 1, _)`,
+    * and a node past the last step goes to `sink`. A `true` from the sink
+    * ends the walk. `collect` keeps select's per-`Deep`-filter identity
+    * dedupe: a deep filter reaches an object element both through its
+    * array and on its own, and Jayway returns it once.
+    */
+  private final class Eval(root: JsonNode, steps: Array[Step],
+      sink: JsonNode => Boolean, collect: Boolean) {
+    private val seen: Array[java.util.Set[JsonNode]] =
+      if (collect) new Array(steps.length) else null
+
+    def walk(k: Int, node: JsonNode): Boolean =
+      if (k == steps.length) sink(node)
+      else steps(k) match {
+        case Deep(inner) =>
+          if (seen != null && inner.isInstanceOf[FilterStep])
+            seen(k) = Collections.newSetFromMap(new IdentityHashMap[JsonNode, java.lang.Boolean]())
+          scan(inner, node, k + 1)
+        case step => applyStep(step, node, k + 1)
+      }
+
+    /** Pre-order deep scan: `inner` at `node`, then at every descendant. */
+    private def scan(inner: Step, node: JsonNode, next: Int): Boolean =
+      applyStep(inner, node, next) || {
+        val it = node.elements()
+        var hit = false
+        while (!hit && it.hasNext) hit = scan(inner, it.next(), next)
+        hit
+      }
+
+    /** Pass a node selected by step `next - 1` on to step `next`. */
+    private def emit(next: Int, n: JsonNode): Boolean =
+      n != null && (seen == null || seen(next - 1) == null || seen(next - 1).add(n)) &&
+        walk(next, n)
+
+    /** Apply one non-deep step at `node`. `JsonNode.get` is null for a
+      * missing field, an out-of-range index and a node of the wrong kind.
+      */
+    private def applyStep(step: Step, node: JsonNode, next: Int): Boolean = step match {
+      case Field(name) => emit(next, node.get(name))
+      case Index(i) => emit(next, node.get(if (i < 0) node.size + i else i))
+      case ScriptIndex(off) => emit(next, node.get(node.size + off))
+      case Slice(start, end) =>
+        val n = node.size
+        (normSlice(start.getOrElse(0), n) until normSlice(end.getOrElse(n), n))
+          .exists(i => emit(next, node.get(i)))
+      case UnionIdx(is) => is.exists(i => emit(next, node.get(if (i < 0) node.size + i else i)))
+      case UnionFields(names) => names.exists(nm => emit(next, node.get(nm)))
+      case Wildcard => anyOf(node, next, null)
+      case FilterStep(pred) =>
+        if (node.isArray) anyOf(node, next, pred)
+        else node.isObject && holds(node, pred) && emit(next, node)
+      case FnLength => emit(next, length(node))
+      case FnAgg(kind) => emit(next, aggregate(node, kind))
+      case Deep(_) => false // a deep step never nests another (compile)
     }
-    current.nonEmpty
+
+    /** Pass on each child of `node` that satisfies `pred` (null: all). */
+    private def anyOf(node: JsonNode, next: Int, pred: Pred): Boolean = {
+      val it = node.elements()
+      var hit = false
+      while (!hit && it.hasNext) {
+        val c = it.next()
+        hit = (pred == null || holds(c, pred)) && emit(next, c)
+      }
+      hit
+    }
+
+    private def holds(node: JsonNode, pred: Pred): Boolean = pred match {
+      case Or(cs)  => cs.exists(holds(node, _))
+      case And(ts) => ts.forall(holds(node, _))
+      case Exists(p) => existsFrom(root, node, p)
+      case Cmp(p, op, lit) =>
+        val v = resolve(node, p)
+        v != null && compare(v, op, lit)
+    }
+
+    private def compare(v: JsonNode, op: Int, lit: Lit): Boolean = lit match {
+      case PathLit(steps) =>
+        // a missing or non-scalar root operand makes the comparison false
+        val r = literalOf(resolve(root, steps))
+        r != null && compare(v, op, r)
+      case RLit(re)     => v.isTextual && re.matcher(v.textValue).matches()
+      case LLit(items)  => items.exists(compare(v, Eq, _)) != (op == Nin) // scalar items
+      case SLit(s) if v.isTextual => opHolds(op, v.textValue.compareTo(s))
+      case NLit(n) if v.isNumber  => opHolds(op, v.decimalValue.compareTo(n))
+      case BLit(b) if op == Eq || op == Ne => (v.isBoolean && v.booleanValue == b) == (op == Eq)
+      case NullLit if op == Eq || op == Ne => v.isNull == (op == Eq)
+      case _ => op == Ne // both sides exist with different types
+    }
   }
 
   private def normSlice(i: Int, n: Int): Int =
     math.max(0, math.min(n, if (i < 0) n + i else i))
 
-  private def applyStep(root: JsonNode, node: JsonNode, step: Step): Seq[JsonNode] = step match {
-    case Field(name) =>
-      if (node.isObject && node.has(name)) Seq(node.get(name)) else Seq.empty
-    case Index(i) =>
-      if (node.isArray) {
-        val n = node.size
-        val idx = if (i < 0) n + i else i
-        if (idx >= 0 && idx < n) Seq(node.get(idx)) else Seq.empty
-      } else Seq.empty
-    case ScriptIndex(off) =>
-      if (node.isArray) {
-        val idx = node.size + off
-        if (idx >= 0 && idx < node.size) Seq(node.get(idx)) else Seq.empty
-      } else Seq.empty
-    case Slice(start, end) =>
-      if (node.isArray) {
-        val n = node.size
-        val s0 = normSlice(start.getOrElse(0), n)
-        val e0 = normSlice(end.getOrElse(n), n)
-        (s0 until e0).map(node.get)
-      } else Seq.empty
-    case UnionIdx(is) =>
-      if (node.isArray) {
-        val n = node.size
-        is.flatMap { i =>
-          val idx = if (i < 0) n + i else i
-          if (idx >= 0 && idx < n) Some(node.get(idx)) else None
-        }
-      } else Seq.empty
-    case UnionFields(names) =>
-      if (node.isObject) names.flatMap(nm => if (node.has(nm)) Some(node.get(nm)) else None)
-      else Seq.empty
-    case Wildcard =>
-      if (node.isArray) node.elements().asScala.toSeq
-      else if (node.isObject) node.elements().asScala.toSeq
-      else Seq.empty
-    case Deep(inner) =>
-      // pre-order: apply `inner` at this node, then recurse into children
-      // of objects AND arrays. A deep FILTER can surface the same node
-      // twice — once as a kept element of its parent array's FilterStep and
-      // once when the walk visits the node itself — so those matches are
-      // deduped by node identity (Jayway returns each match once).
-      val out = ArrayBuffer.empty[JsonNode]
-      val seen = java.util.Collections.newSetFromMap(
-        new java.util.IdentityHashMap[JsonNode, java.lang.Boolean]())
-      val dedupe = inner.isInstanceOf[FilterStep]
-      def walk(n: JsonNode): Unit = {
-        val hits = applyStep(root, n, inner)
-        if (dedupe) hits.foreach(h => if (seen.add(h)) out += h)
-        else out ++= hits
-        if (n.isObject || n.isArray) n.elements().asScala.foreach(walk)
-      }
-      walk(node)
-      out.toSeq
-    case FilterStep(pred) =>
-      if (node.isArray) node.elements().asScala.filter(evalPred(root, _, pred)).toSeq
-      else if (node.isObject) { if (evalPred(root, node, pred)) Seq(node) else Seq.empty }
-      else Seq.empty
-    case FnLength =>
-      // Jayway length()/size(): array size, object size, string length;
-      // other node types have no length
-      if (node.isArray || node.isObject)
-        Seq(com.fasterxml.jackson.databind.node.JsonNodeFactory.instance.numberNode(node.size))
-      else if (node.isTextual)
-        Seq(com.fasterxml.jackson.databind.node.JsonNodeFactory.instance.numberNode(node.asText.length))
-      else Seq.empty
-    case FnAgg(kind) =>
-      val fac = com.fasterxml.jackson.databind.node.JsonNodeFactory.instance
-      kind match {
-        case "first" =>
-          if (node.isArray && node.size > 0) Seq(node.get(0)) else Seq.empty
-        case "last" =>
-          if (node.isArray && node.size > 0) Seq(node.get(node.size - 1)) else Seq.empty
-        case "keys" =>
-          if (node.isObject) {
-            val arr = fac.arrayNode()
-            node.fieldNames().asScala.foreach(arr.add)
-            Seq(arr)
-          } else Seq.empty
-        case _ =>
-          // numeric aggregates: defined only on non-empty all-number arrays
-          // (Jayway throws on anything else; suppressed ⇒ no node)
-          if (!node.isArray || node.size == 0) Seq.empty
-          else {
-            val elems = node.elements().asScala.toSeq
-            if (!elems.forall(_.isNumber)) Seq.empty
-            else {
-              val xs = elems.map(_.doubleValue())
-              val v = kind match {
-                case "min" => xs.min
-                case "max" => xs.max
-                case "sum" => xs.sum
-                case "avg" => xs.sum / xs.length
-                case "stddev" =>
-                  val mean = xs.sum / xs.length
-                  math.sqrt(xs.map(x => (x - mean) * (x - mean)).sum / xs.length)
-              }
-              Seq(fac.numberNode(v))
-            }
-          }
-      }
-  }
+  private val nodes = com.fasterxml.jackson.databind.node.JsonNodeFactory.instance
 
-  private def selectRel(root: JsonNode, node: JsonNode, path: Seq[Step]): Seq[JsonNode] = {
-    var current: Seq[JsonNode] = Seq(node)
-    path.foreach { step =>
-      if (current.isEmpty) return Seq.empty
-      current = current.flatMap(applyStep(root, _, step))
+  /** A definite path (fields, indices, length()) walked straight down from
+    * `node`; null when it selects nothing.
+    */
+  private def resolve(node: JsonNode, path: Array[Step]): JsonNode = {
+    var n = node
+    var i = 0
+    while (n != null && i < path.length) {
+      n = path(i) match {
+        case Field(name) => n.get(name)
+        case Index(j)    => n.get(if (j < 0) n.size + j else j)
+        case _           => length(n) // FnLength: the only other definite step
+      }
+      i += 1
     }
-    current
+    n
   }
 
-  private def evalPred(root: JsonNode, node: JsonNode, pred: Pred): Boolean = pred match {
-    case Or(cs)  => cs.exists(evalPred(root, node, _))
-    case And(ts) => ts.forall(evalPred(root, node, _))
-    case Exists(p) => selectRel(root, node, p).nonEmpty
-    case Cmp(p, op, lit) =>
-      selectRel(root, node, p).headOption.exists(compare(root, _, op, lit))
-  }
+  /** Jayway length()/size(): array size, object size, string length; other
+    * node types have no length.
+    */
+  private def length(node: JsonNode): JsonNode =
+    if (node.isContainerNode) nodes.numberNode(node.size)
+    else if (node.isTextual) nodes.numberNode(node.textValue.length)
+    else null
 
-  private def litEquals(v: JsonNode, lit: Lit): Boolean = lit match {
-    case SLit(s)  => v.isTextual && v.asText == s
-    case NLit(n)  => v.isNumber && BigDecimal(v.decimalValue()).compare(n) == 0
-    case BLit(b)  => v.isBoolean && v.asBoolean == b
-    case NullLit  => v.isNull
-    case _        => false
-  }
-
-  /** A root-path operand resolves to the scalar it selects (missing or
-    * non-scalar operand => the comparison is false, Jayway's behavior for
-    * an unresolvable operand). */
-  private def nodeToLit(n: JsonNode): Option[Lit] =
-    if (n.isTextual) Some(SLit(n.asText))
-    else if (n.isNumber) Some(NLit(BigDecimal(n.decimalValue())))
-    else if (n.isBoolean) Some(BLit(n.asBoolean))
-    else if (n.isNull) Some(NullLit)
-    else None
-
-  private def compare(root: JsonNode, v: JsonNode, op: String, lit: Lit): Boolean = (lit, op) match {
-    case (PathLit(steps), _) =>
-      select(root, Compiled(steps)).headOption.flatMap(nodeToLit) match {
-        case Some(resolved) => compare(root, v, op, resolved)
-        case None           => false
+  private def aggregate(node: JsonNode, kind: String): JsonNode = kind match {
+    case "first" => if (node.isArray) node.get(0) else null
+    case "last"  => if (node.isArray) node.get(node.size - 1) else null
+    case "keys" =>
+      if (node.isObject) { val arr = nodes.arrayNode(); node.fieldNames().forEachRemaining(arr.add(_)); arr }
+      else null
+    case _ =>
+      // numeric aggregates: defined only on non-empty all-number arrays
+      // (Jayway throws on anything else; suppressed ⇒ no node)
+      val elems = node.elements().asScala.toSeq
+      if (!node.isArray || elems.isEmpty || !elems.forall(_.isNumber)) null
+      else {
+        val xs = elems.map(_.doubleValue())
+        val mean = xs.sum / xs.length
+        nodes.numberNode(kind match {
+          case "min" => xs.min
+          case "max" => xs.max
+          case "sum" => xs.sum
+          case "avg" => mean
+          case "stddev" => math.sqrt(xs.map(x => (x - mean) * (x - mean)).sum / xs.length)
+        })
       }
-    case (r: RLit, "=~") => v.isTextual && r.pattern.matcher(v.asText).matches()
-    case (LLit(items), "in")  => items.exists(litEquals(v, _))
-    case (LLit(items), "nin") => !items.exists(litEquals(v, _))
-    case (SLit(s), _) if v.isTextual =>
-      val c = v.asText.compareTo(s)
-      opHolds(op, c)
-    case (NLit(n), _) if v.isNumber =>
-      val c = BigDecimal(v.decimalValue()).compare(n)
-      opHolds(op, c)
-    case (BLit(b), "==") => v.isBoolean && v.asBoolean == b
-    case (BLit(b), "!=") => !(v.isBoolean && v.asBoolean == b)
-    case (NullLit, "==") => v.isNull
-    case (NullLit, "!=") => !v.isNull
-    case (_, "!=")       => true // both exist, different types
-    case _               => false
   }
 
-  private def opHolds(op: String, cmp: Int): Boolean = op match {
-    case "==" => cmp == 0
-    case "!=" => cmp != 0
-    case "<"  => cmp < 0
-    case "<=" => cmp <= 0
-    case ">"  => cmp > 0
-    case ">=" => cmp >= 0
-    case _    => false
-  }
+  /** The literal a resolved root-path operand stands for; null when the
+    * operand is missing or not a scalar (Jayway's unresolvable operand).
+    */
+  private def literalOf(n: JsonNode): Lit =
+    if (n == null) null
+    else if (n.isTextual) SLit(n.textValue)
+    else if (n.isNumber) NLit(n.decimalValue)
+    else if (n.isBoolean) BLit(n.booleanValue)
+    else if (n.isNull) NullLit
+    else null
+
+  private def opHolds(op: Int, cmp: Int): Boolean =
+    if (cmp < 0) op == Ne || op == Lt || op == Le
+    else if (cmp > 0) op == Ne || op == Gt || op == Ge
+    else op == Eq || op == Le || op == Ge
 }

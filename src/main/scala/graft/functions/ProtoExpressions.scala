@@ -5,7 +5,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnBridge.{toColumn, toExpression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -28,15 +28,24 @@ import scala.util.control.NonFatal
   *  - msgCount: Int      — `tx.body.messages.count()` (the reference logs
   *                         this per routed record, TopologyProducer.kt:153)
   */
-case class DecodeCosmosTx(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+case class DecodeCosmosTx(child: Expression) extends UnaryExpression {
 
   override def dataType: DataType = DecodeCosmosTx.schema
   override def nullable: Boolean = child.nullable
   override def prettyName: String = "decode_tx"
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val bytes = input.asInstanceOf[Array[Byte]]
+  override protected def nullSafeEval(input: Any): Any = decode(input.asInstanceOf[Array[Byte]])
+
+  // no CodegenFallback: whole-stage codegen refuses a stage holding a
+  // non-leaf fallback expression, which kept the decode projection out of
+  // the stage that routes and explodes
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("decodeTx", this, classOf[DecodeCosmosTx].getName)
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.decode($c);")
+  }
+
+  /** Row-level decode, also the codegen target. */
+  def decode(bytes: Array[Byte]): InternalRow =
     try {
       val tx = CosmosTx.decode(bytes)
       val json = CosmosTx.toJson(tx)
@@ -53,7 +62,6 @@ case class DecodeCosmosTx(child: Expression)
           UTF8String.fromString(s"${e.getClass.getSimpleName}: ${e.getMessage}"),
           null, null)
     }
-  }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -3,6 +3,8 @@ package graft.operators
 import graft.functions.JsonPathFunctions.json_path_routes
 import graft.rules.{TxDispatchRules}
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftColumnBridge.{toColumn, toExpression}
+import org.apache.spark.sql.catalyst.expressions.Base64
 import org.apache.spark.sql.functions._
 
 /** The routing core: one narrow Catalyst plan implementing the reference's
@@ -122,25 +124,30 @@ object TxDispatchPipeline {
     * Jackson writes all three fields, null included, and renders ByteArray
     * as base64).
     *
-    * Built by explicit concatenation (not `to_json`) because Jackson keeps
-    * null fields while Spark's `to_json` drops them; concatenation also
-    * gives the oracle-side SQL an exact character-for-character twin.
+    * Built by explicit concatenation (not `to_json` of the whole record)
+    * because Jackson keeps null fields while Spark's `to_json` drops them.
+    * `txBytes` is one unbroken base64 line, as Jackson writes a ByteArray:
+    * the expression is built with `chunkBase64 = false` because the
+    * `base64` function follows `spark.sql.chunkBase64String.enabled`,
+    * which is on by default in Spark 4.1 and puts CRLF every 76 characters.
     */
   def dlqEnvelope(txJson: Column, raw: Column): Column =
     concat(
       lit("{\"txJson\":"),
       when(txJson.isNull, lit("null")).otherwise(jsonQuote(txJson)),
       lit(",\"txBytes\":"),
-      when(raw.isNull, lit("null")).otherwise(concat(lit("\""), base64(raw), lit("\""))),
+      when(raw.isNull, lit("null")).otherwise(
+        concat(lit("\""), toColumn(Base64(toExpression(raw), chunkBase64 = false)), lit("\""))),
       lit(",\"message\":null}"))
 
-  /** Quote a string as a JSON string literal. The payload here is itself a
-    * canonical JSON document (no control characters), so escaping backslash
-    * and quote suffices.
+  /** Quote a string as a JSON string literal, escaped as Jackson escapes
+    * it: quote, backslash and every control character. A JSON-native
+    * document may carry raw newlines and tabs between its tokens. Spark's
+    * `to_json` writes through a default Jackson generator, so the one-element
+    * array it renders, `["…"]`, holds exactly that literal.
     */
-  private def jsonQuote(c: Column): Column =
-    concat(
-      lit("\""),
-      regexp_replace(regexp_replace(c, lit("\\\\"), lit("\\\\\\\\")), lit("\""), lit("\\\\\"")),
-      lit("\""))
+  private def jsonQuote(c: Column): Column = {
+    val quotedInArray = to_json(array(c))
+    quotedInArray.substr(lit(2), length(quotedInArray) - 2)
+  }
 }

@@ -83,6 +83,42 @@ class DispatchPipelineSpec extends AnyFunSuite {
     assert(out.toSeq == Seq(expected))
   }
 
+  /** The reference's DLQ record as Jackson writes it (a ByteArray as one
+    * base64 line, the null message kept).
+    */
+  private def jacksonDlq(txJson: String, txBytes: Array[Byte]): String = {
+    val fields = new java.util.LinkedHashMap[String, AnyRef]()
+    fields.put("txJson", txJson); fields.put("txBytes", txBytes); fields.put("message", null)
+    new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsString(fields)
+  }
+
+  test("DLQ envelope of a long record: one base64 line that decodes to the canonical bytes") {
+    import graft.proto.CosmosTx
+    val tx = CosmosTx.Tx(CosmosTx.TxBody(Nil, "m" * 80, 0L), CosmosTx.AuthInfo(Nil, None), Nil)
+    val canonical = CosmosTx.encode(tx)
+    assert(canonical.length >= 58, "long enough for a chunking base64 to break the line")
+    val out = graft.operators.ProtoTx.routed(Seq(("long", canonical)).toDF("key", "raw"), rules)
+      .filter($"route" === UNFILTERED)
+      .select(decode($"value", "UTF-8")).as[String].collect()
+    assert(out.length == 1)
+    val envelope = out.head
+    assert(!envelope.exists(c => c == '\r' || c == '\n'), envelope)
+    val parsed = new com.fasterxml.jackson.databind.ObjectMapper().readTree(envelope)
+    assert(java.util.Base64.getDecoder.decode(parsed.get("txBytes").textValue).toSeq == canonical.toSeq)
+    assert(envelope == jacksonDlq(CosmosTx.toJson(tx), canonical))
+  }
+
+  test("DLQ envelope of a pretty-printed JSON input equals Jackson's own serialisation") {
+    val pretty = "{\n  \"body\": {},\r\n\t\"authInfo\": {\"memo\": \"a\\\\b \\\"q\\\"\"}\n}"
+    val in = Seq(("pretty", pretty)).toDF("key", "payload")
+      .withColumn("raw", encode($"payload", "UTF-8"))
+      .withColumn("txJson", $"payload")
+    val out = TxDispatchPipeline(in, rules)
+      .filter($"route" === UNFILTERED)
+      .select(decode($"value", "UTF-8")).as[String].collect()
+    assert(out.toSeq == Seq(jacksonDlq(pretty, pretty.getBytes("UTF-8"))))
+  }
+
   test("unset error topic: errored records keep NULL topic and are dropped at the sink") {
     // reference: branch without to() — consumed, observed, not produced.
     // The pipeline keeps the rows (so observe metrics still count them);

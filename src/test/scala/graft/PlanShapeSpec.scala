@@ -377,7 +377,10 @@ class PlanShapeSpec extends AnyFunSuite {
       "q_wwm_mask", // vocab-rank PrefixSum triangle + 1-row vocab-size frame
       "q_wwm_mask_capped", // same frames (the budget scan joins doc-keyed, hash not BNLJ)
       "q_mlm_mask_epochs", // q_mlm_mask's frames, one copy per epoch branch
-      "q_key_skew") // 1-row (nk, total) totals frame broadcast onto the top-k keys
+      "q_key_skew", // 1-row (nk, total) totals frame broadcast onto the top-k keys
+      // PrefixSum.denseRank's offset triangle: the broadcast side is the
+      // per-range-partition distinct-count table, ≤ numShufflePartitions rows
+      "q_suffix_rank", "q_suffix_dup_runs", "q_substring_removal_sa")
     def collectAll(p: SparkPlan): Seq[SparkPlan] =
       (p +: p.children.flatMap(collectAll)) ++ (p match {
         case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => collectAll(a.executedPlan)

@@ -91,6 +91,25 @@ class ProtoPipelineSpec extends AnyFunSuite {
     assert(dlq.contains(s""""txBytes":"$b64canon""""), dlq)
   }
 
+  test("every projection of the routed plan, decode included, runs inside whole-stage codegen") {
+    import org.apache.spark.sql.execution.{InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    // an RDD-backed input: over a local relation the optimizer would
+    // evaluate the projections at planning time and leave none to check
+    val rows = spark.sparkContext.parallelize(Seq(("k1", tx1), ("k3", tx3), ("k4", txError)), 2)
+    val plan = ProtoTx.routed(rows.toDF("key", "raw"), rules).queryExecution.executedPlan
+    def projects(p: SparkPlan, inCodegen: Boolean): Seq[(ProjectExec, Boolean)] = p match {
+      case a: AdaptiveSparkPlanExec => projects(a.executedPlan, inCodegen)
+      case w: WholeStageCodegenExec => projects(w.child, inCodegen = true)
+      case i: InputAdapter => projects(i.child, inCodegen = false) // the stage's input
+      case pe: ProjectExec => (pe, inCodegen) +: pe.children.flatMap(projects(_, inCodegen))
+      case other => other.children.flatMap(projects(_, inCodegen))
+    }
+    val found = projects(plan, inCodegen = false)
+    assert(found.exists(_._1.projectList.exists(_.toString.contains("decode_tx"))), plan.toString)
+    assert(found.forall(_._2), s"a projection outside whole-stage codegen:\n$plan")
+  }
+
   test("msgCount matches the reference's logged messages.count()") {
     val got = ProtoTx.decoded(input)
       .select($"key", $"msgCount").as[(String, Option[Int])].collect().toMap
