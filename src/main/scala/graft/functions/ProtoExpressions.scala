@@ -4,9 +4,9 @@ import graft.proto.CosmosTx
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnBridge.{toColumn, toExpression}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BaseGenericInternalRow, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -14,11 +14,10 @@ import scala.util.control.NonFatal
 
 /** `decode_tx(bytes)` — total protobuf decode of a Cosmos transaction
   * (reference P1, TopologyProducer.kt:86–96): two-stage TxRaw → Tx parse
-  * with failure captured as data, plus — in the same single pass — the
-  * canonical JSON rendering (reference P2) and the canonical re-encoding
-  * (reference X3). One narrow expression covers the whole per-record
-  * pre-routing chain, so whole-stage codegen pipelines it with the rule
-  * evaluation and the explode.
+  * with failure captured as data, plus the canonical JSON rendering
+  * (reference P2) and the canonical re-encoding (reference X3). One narrow
+  * expression covers the whole per-record pre-routing chain, so whole-stage
+  * codegen pipelines it with the rule evaluation and the explode.
   *
   * Result struct:
   *  - txJson: String     — canonical proto-JSON (null on decode failure)
@@ -27,6 +26,19 @@ import scala.util.control.NonFatal
   *  - msgTypeUrls: Array[String] — payload type discriminators
   *  - msgCount: Int      — `tx.body.messages.count()` (the reference logs
   *                         this per routed record, TopologyProducer.kt:153)
+  *
+  * Decode and render run eagerly, inside one `try`, so a record gets
+  * exactly one of `error` and `txJson`. `reencoded`, `msgTypeUrls` and
+  * `msgCount` are computed from the decoded `Tx` when first read
+  * ([[DecodedTxRow]]): they cannot fail once decode has succeeded, and
+  * most plans read them for few records or none. Predicate pushdown copies
+  * the whole `decode_tx(raw)` into a single-topic consumer's `Filter`,
+  * which reads only `txJson`, so it never re-encodes. The `Project` above
+  * it runs its own `decode_tx(raw)` for each record the filter keeps: it
+  * decodes and renders that record a second time, then reads only
+  * `reencoded` and drops the JSON (see the open `FOUND:` line on two
+  * decode sites in CHANGES.md). Column pruning leaves `msgTypeUrls`
+  * unread in `ProtoTx.routed`.
   */
 case class DecodeCosmosTx(child: Expression) extends UnaryExpression {
 
@@ -48,14 +60,7 @@ case class DecodeCosmosTx(child: Expression) extends UnaryExpression {
   def decode(bytes: Array[Byte]): InternalRow =
     try {
       val tx = CosmosTx.decode(bytes)
-      val json = CosmosTx.toJson(tx)
-      val reenc = CosmosTx.encode(tx)
-      InternalRow(
-        UTF8String.fromString(json),
-        reenc,
-        null,
-        new GenericArrayData(tx.body.messages.map(m => UTF8String.fromString(m.typeUrl)).toArray[Any]),
-        tx.body.messages.size)
+      new DecodedTxRow(tx, UTF8String.fromString(CosmosTx.toJson(tx)))
     } catch {
       case NonFatal(e) =>
         InternalRow(null, null,
@@ -74,6 +79,37 @@ object DecodeCosmosTx {
     StructField("error", StringType),
     StructField("msgTypeUrls", ArrayType(StringType, containsNull = false)),
     StructField("msgCount", IntegerType)))
+}
+
+/** A successful [[DecodeCosmosTx]] result: `txJson` rendered at decode,
+  * `reencoded` and `msgTypeUrls` built from `tx` on first read and kept,
+  * `msgCount` read off `tx`. `isNullAt` forces nothing (only `error` is
+  * null), and `copy()` materialises every field into a
+  * `GenericInternalRow`. Read-only, like any expression result.
+  */
+final class DecodedTxRow(tx: CosmosTx.Tx, txJson: UTF8String)
+    extends InternalRow with BaseGenericInternalRow {
+  private var reencoded: Array[Byte] = _
+  private var msgTypeUrls: ArrayData = _
+
+  override def numFields: Int = 5
+  override def isNullAt(ordinal: Int): Boolean = ordinal == 2
+
+  override protected def genericGet(ordinal: Int): Any = ordinal match {
+    case 0 => txJson
+    case 1 =>
+      if (reencoded == null) reencoded = CosmosTx.encode(tx)
+      reencoded
+    case 2 => null
+    case 3 =>
+      if (msgTypeUrls == null)
+        msgTypeUrls = new GenericArrayData(tx.body.messages.map(m => UTF8String.fromString(m.typeUrl)).toArray[Any])
+      msgTypeUrls
+    case 4 => tx.body.messages.size
+  }
+
+  override def setNullAt(i: Int): Unit = throw new UnsupportedOperationException("decode_tx rows are read-only")
+  override def update(i: Int, value: Any): Unit = throw new UnsupportedOperationException("decode_tx rows are read-only")
 }
 
 /** `encode_msg_send_tx(from, to, denom, amount)` — build the canonical

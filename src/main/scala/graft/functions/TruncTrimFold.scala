@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnBridge.{toColumn, toExpression}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -31,11 +31,20 @@ import org.apache.spark.unsafe.types.UTF8String
   * `pairKey` is the pre-joined `concat_ws(":", doc_id, sent_idx)`; a
   * NULL `la`/`lb` yields the all-zero row, matching the HOF chain's
   * `when(n > 0, …).otherwise(zero)` null collapse.
+  *
+  * Precondition: `doc_id` and `sent_idx` are non-null. `concat_ws` skips
+  * a null and its separator, so with both keys null the HOF spelling
+  * hashed `"i"` where this pass hashes `":i"`; the draws (and the trims)
+  * then differ.
+  *
+  * Inputs are checked at analysis: `(string, bigint, bigint)`, so an
+  * uncast `size()` (an int) fails there instead of at run time.
   */
 case class TruncTrimFold(pairKey: Expression, la: Expression,
-    lb: Expression, maxSeq: Int) extends Expression {
+    lb: Expression, maxSeq: Int) extends Expression with ExpectsInputTypes {
 
   override def children: Seq[Expression] = Seq(pairKey, la, lb)
+  override def inputTypes = Seq(StringType, LongType, LongType) // AbstractDataType is private[sql]
   override def dataType: DataType = TruncTrimFold.schema
   override def nullable: Boolean = false
   override def prettyName: String = "trunc_trim_fold"

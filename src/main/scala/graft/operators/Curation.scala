@@ -1093,7 +1093,10 @@ object Curation {
     */
   private def gopherDupNum(w: Column, zp: Column, n: Int): Column = {
     val m = size(zp)
-    val pairs = zip_with(slice(zp, lit(1), m - 1), slice(zp, lit(2), m - 1),
+    // clamped: a negative slice length throws, whichever branch of the
+    // `when` below ends up evaluated
+    val len = greatest(m - 1, lit(0))
+    val pairs = zip_with(slice(zp, lit(1), len), slice(zp, lit(2), len),
       (a, b) => when(a("ng") === b("ng"), array(a("p"), b("p")))
         .otherwise(array().cast("array<int>")))
     val covered = array_distinct(flatten(transform(flatten(pairs),

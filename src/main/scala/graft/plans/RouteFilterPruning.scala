@@ -124,6 +124,8 @@ object RouteFilterPruning extends Rule[LogicalPlan] {
 
   private def pruned(g: Generate, jr: JsonPathRoutes, i: Int): LogicalPlan = {
     val route = g.generatorOutput.head
+    // under ProtoTx.routed, pushdown later copies decode_tx(raw) into this
+    // Filter; it reads only txJson, which decode_tx renders eagerly
     val filtered = Filter(JsonPathExists(jr.child, jr.paths(i)), g.child)
     // Reproduce Generate's EXACT output (requiredChildOutput ++ generator
     // output — child columns may have been pruned via unrequiredChildIndex),

@@ -2,8 +2,10 @@ package graft.proto
 
 import graft.proto.ProtoWire.{ProtoParseException, Reader, Writer}
 
+import java.lang.{StringBuilder => JStringBuilder}
 import java.util.Base64
 import scala.collection.mutable.ArrayBuffer
+import scala.util.control.NonFatal
 
 /** The Cosmos-SDK transaction envelope, hand-modeled from the public
   * cosmos.tx.v1beta1 schema the reference compiles against
@@ -275,21 +277,25 @@ object CosmosTx {
       } catch {
         case e: java.util.ServiceConfigurationError =>
           System.err.println(s"[graft] skipping broken PayloadTypePrinters provider: ${e.getMessage}")
-        case scala.util.control.NonFatal(e) =>
+        case NonFatal(e) =>
           System.err.println(s"[graft] skipping failing PayloadTypePrinters provider: ${e.getMessage}")
       }
     }
     defaultRegistry ++ loaded
   }
 
+  /** The built-in printers: each renders its payload's fields into a
+    * buffer of its own with the renderer's helpers below, and returns the
+    * comma-prefixed fragment like any [[PayloadTypePrinters]] printer.
+    */
   val defaultRegistry: Map[String, PayloadPrinter] = Map(
     "/cosmos.bank.v1beta1.MsgSend" -> { bytes =>
       val m = parseMsgSend(bytes)
-      val sb = new StringBuilder
-      if (m.fromAddress.nonEmpty) sb.append(",\"fromAddress\":").append(jsonStr(m.fromAddress))
-      if (m.toAddress.nonEmpty) sb.append(",\"toAddress\":").append(jsonStr(m.toAddress))
-      if (m.amount.nonEmpty) sb.append(",\"amount\":").append(coinsJson(m.amount))
-      sb.result()
+      val sb = new JStringBuilder
+      if (m.fromAddress.nonEmpty) str(sb.append(",\"fromAddress\":"), m.fromAddress)
+      if (m.toAddress.nonEmpty) str(sb.append(",\"toAddress\":"), m.toAddress)
+      if (m.amount.nonEmpty) coins(sb.append(",\"amount\":"), m.amount)
+      sb.toString
     },
     "/cosmos.crypto.secp256k1.PubKey" -> { bytes =>
       // PubKey { 1: key(bytes) }
@@ -299,49 +305,79 @@ object CosmosTx {
         case (1, 2) => key = r.readBytes()
         case (_, wt) => r.skip(wt)
       }
-      if (key.isEmpty) "" else ",\"key\":" + jsonStr(Base64.getEncoder.encodeToString(key))
+      if (key.isEmpty) "" else base64(new JStringBuilder(",\"key\":"), key).toString
     })
 
-  private def jsonStr(s: String): String = {
-    val sb = new StringBuilder(s.length + 2)
+  private val Hex = "0123456789abcdef"
+
+  /** `sb`, after a comma unless nothing was appended since `open`, the
+    * position just past the enclosing object's `{` or array's `[`.
+    */
+  private def sep(sb: JStringBuilder, open: Int): JStringBuilder =
+    if (sb.length == open) sb else sb.append(',')
+
+  /** `s` as a JSON string: each run of characters that needs no escape is
+    * copied in one bulk append.
+    */
+  private def str(sb: JStringBuilder, s: String): JStringBuilder = {
     sb.append('"')
-    s.foreach {
-      case '"'  => sb.append("\\\"")
-      case '\\' => sb.append("\\\\")
-      case '\n' => sb.append("\\n")
-      case '\r' => sb.append("\\r")
-      case '\t' => sb.append("\\t")
-      case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
-      case c => sb.append(c)
+    var run = 0
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if (c < ' ' || c == '"' || c == '\\') {
+        sb.append(s, run, i)
+        c match {
+          case '"' => sb.append("\\\"")
+          case '\\' => sb.append("\\\\")
+          case '\n' => sb.append("\\n")
+          case '\r' => sb.append("\\r")
+          case '\t' => sb.append("\\t")
+          case _ => sb.append("\\u00").append(Hex.charAt(c >> 4)).append(Hex.charAt(c & 0xf))
+        }
+        run = i + 1
+      }
+      i += 1
     }
-    sb.append('"').result()
+    sb.append(s, run, s.length).append('"')
   }
 
-  private def coinsJson(coins: Seq[Coin]): String =
-    coins.map { c =>
-      val fields = Seq(
-        if (c.denom.nonEmpty) Some("\"denom\":" + jsonStr(c.denom)) else None,
-        if (c.amount.nonEmpty) Some("\"amount\":" + jsonStr(c.amount)) else None)
-        .flatten
-      fields.mkString("{", ",", "}")
-    }.mkString("[", ",", "]")
+  /** A uint64 as protobuf's JSON mapping prints it: a decimal string, read
+    * unsigned, so a varint ≥ 2^63 (a negative `Long`) is not printed with a
+    * minus sign.
+    */
+  private def uint64(sb: JStringBuilder, v: Long): JStringBuilder =
+    sb.append('"').append(java.lang.Long.toUnsignedString(v)).append('"')
 
-  private def anyJson(a: AnyMsg, registry: Map[String, PayloadPrinter]): String = {
-    val urlSuffix = a.typeUrl.dropWhile(_ != '/') // "type.googleapis.com/x.Y" → "/x.Y"
+  private def base64(sb: JStringBuilder, bytes: Array[Byte]): JStringBuilder =
+    sb.append('"').append(Base64.getEncoder.encodeToString(bytes)).append('"')
+
+  private def coins(sb: JStringBuilder, cs: Seq[Coin]): JStringBuilder = {
+    val arr = sb.append('[').length
+    cs.foreach { c =>
+      val obj = sep(sb, arr).append('{').length
+      if (c.denom.nonEmpty) str(sb.append("\"denom\":"), c.denom)
+      if (c.amount.nonEmpty) str(sep(sb, obj).append("\"amount\":"), c.amount)
+      sb.append('}')
+    }
+    sb.append(']')
+  }
+
+  private def any(sb: JStringBuilder, a: AnyMsg, registry: Map[String, PayloadPrinter]): JStringBuilder = {
+    str(sb.append("{\"@type\":"), a.typeUrl)
+    val slash = a.typeUrl.indexOf('/') // "type.googleapis.com/x.Y" → "/x.Y"
     // Unregistered payloads — and registered ones whose bytes don't parse —
     // render open-schema as {@type, value:base64}: a malformed PAYLOAD must
     // not turn a decodable ENVELOPE into a decode error (payload isolation,
     // same spirit as per-rule isolation). The reference's classpath scan
     // makes every compiled type printable; this is the offline equivalent.
-    def fallback: String =
-      "{\"@type\":" + jsonStr(a.typeUrl) +
-        (if (a.value.isEmpty) "" else ",\"value\":" + jsonStr(Base64.getEncoder.encodeToString(a.value))) + "}"
-    registry.get(urlSuffix) match {
+    val printed = registry.get(if (slash < 0) "" else a.typeUrl.substring(slash)) match {
       case Some(printer) =>
-        try "{\"@type\":" + jsonStr(a.typeUrl) + printer(a.value) + "}"
-        catch { case scala.util.control.NonFatal(_) => fallback }
-      case None => fallback
+        try { sb.append(printer(a.value)); true } catch { case NonFatal(_) => false }
+      case None => false
     }
+    if (!printed && a.value.nonEmpty) base64(sb.append(",\"value\":"), a.value)
+    sb.append('}')
   }
 
   /** Canonical proto-JSON of a decoded Tx (reference: JsonFormat.printer()
@@ -350,38 +386,54 @@ object CosmosTx {
     * proto3 default-value omission, `Any` inlined with `@type`, bytes as
     * base64, uint64 as JSON string. Subset: the envelope messages modeled
     * above; `mode_info` is not printed.
+    *
+    * One pass into one `java.lang.StringBuilder`: every object, array and
+    * string is appended in place (strings copy each unescaped run in bulk),
+    * a field's comma is decided by whether anything was appended since its
+    * object opened. A payload printer's fragment is appended once it has
+    * returned, so a printer that throws leaves nothing behind and its
+    * payload is rendered as base64. The cost is one buffer (grown a
+    * few times for a large tx), the final `String`, one base64 `String`
+    * per bytes field and one fragment `String` per printed payload: no
+    * other per-field strings, no per-object collections.
     */
   def toJson(tx: Tx, registry: Map[String, PayloadPrinter] = CosmosTx.registry): String = {
-    val sb = new StringBuilder(256)
-    sb.append("{\"body\":{")
-    val bodyFields = ArrayBuffer.empty[String]
-    if (tx.body.messages.nonEmpty)
-      bodyFields += "\"messages\":" + tx.body.messages.map(anyJson(_, registry)).mkString("[", ",", "]")
-    if (tx.body.memo.nonEmpty) bodyFields += "\"memo\":" + jsonStr(tx.body.memo)
-    if (tx.body.timeoutHeight != 0) bodyFields += "\"timeoutHeight\":" + jsonStr(tx.body.timeoutHeight.toString)
-    sb.append(bodyFields.mkString(","))
-    sb.append("},\"authInfo\":{")
-    val authFields = ArrayBuffer.empty[String]
-    if (tx.authInfo.signerInfos.nonEmpty)
-      authFields += "\"signerInfos\":" + tx.authInfo.signerInfos.map { s =>
-        val f = ArrayBuffer.empty[String]
-        s.publicKey.foreach(pk => f += "\"publicKey\":" + anyJson(pk, registry))
-        if (s.sequence != 0) f += "\"sequence\":" + jsonStr(s.sequence.toString)
-        f.mkString("{", ",", "}")
-      }.mkString("[", ",", "]")
-    tx.authInfo.fee.foreach { fee =>
-      val f = ArrayBuffer.empty[String]
-      if (fee.amount.nonEmpty) f += "\"amount\":" + coinsJson(fee.amount)
-      if (fee.gasLimit != 0) f += "\"gasLimit\":" + jsonStr(fee.gasLimit.toString)
-      if (fee.payer.nonEmpty) f += "\"payer\":" + jsonStr(fee.payer)
-      if (fee.granter.nonEmpty) f += "\"granter\":" + jsonStr(fee.granter)
-      authFields += "\"fee\":" + f.mkString("{", ",", "}")
+    val sb = new JStringBuilder(256)
+    val body = tx.body
+    val bodyObj = sb.append("{\"body\":{").length
+    if (body.messages.nonEmpty) {
+      val arr = sb.append("\"messages\":[").length
+      body.messages.foreach(m => any(sep(sb, arr), m, registry))
+      sb.append(']')
     }
-    sb.append(authFields.mkString(","))
-    sb.append("}")
-    if (tx.signatures.nonEmpty)
-      sb.append(",\"signatures\":" + tx.signatures.map(s => jsonStr(Base64.getEncoder.encodeToString(s))).mkString("[", ",", "]"))
-    sb.append("}")
-    sb.result()
+    if (body.memo.nonEmpty) str(sep(sb, bodyObj).append("\"memo\":"), body.memo)
+    if (body.timeoutHeight != 0) uint64(sep(sb, bodyObj).append("\"timeoutHeight\":"), body.timeoutHeight)
+    val auth = tx.authInfo
+    val authObj = sb.append("},\"authInfo\":{").length
+    if (auth.signerInfos.nonEmpty) {
+      val arr = sb.append("\"signerInfos\":[").length
+      auth.signerInfos.foreach { s =>
+        val obj = sep(sb, arr).append('{').length
+        s.publicKey.foreach(pk => any(sb.append("\"publicKey\":"), pk, registry))
+        if (s.sequence != 0) uint64(sep(sb, obj).append("\"sequence\":"), s.sequence)
+        sb.append('}')
+      }
+      sb.append(']')
+    }
+    auth.fee.foreach { fee =>
+      val obj = sep(sb, authObj).append("\"fee\":{").length
+      if (fee.amount.nonEmpty) coins(sb.append("\"amount\":"), fee.amount)
+      if (fee.gasLimit != 0) uint64(sep(sb, obj).append("\"gasLimit\":"), fee.gasLimit)
+      if (fee.payer.nonEmpty) str(sep(sb, obj).append("\"payer\":"), fee.payer)
+      if (fee.granter.nonEmpty) str(sep(sb, obj).append("\"granter\":"), fee.granter)
+      sb.append('}')
+    }
+    sb.append('}')
+    if (tx.signatures.nonEmpty) {
+      val arr = sb.append(",\"signatures\":[").length
+      tx.signatures.foreach(s => base64(sep(sb, arr), s))
+      sb.append(']')
+    }
+    sb.append('}').toString
   }
 }

@@ -141,6 +141,21 @@ class CosmosTxSpec extends AnyFunSuite {
     }
   }
 
+  test("uint64 fields at and above 2^63 round-trip and render unsigned, as protobuf's JsonFormat does") {
+    for ((v, text) <- Seq(Long.MinValue -> "9223372036854775808", -1L -> "18446744073709551615")) {
+      val tx = Tx(TxBody(Nil, "", v), AuthInfo(Seq(SignerInfo(None, v)), Some(Fee(Nil, v, "", ""))), Nil)
+      val rt = decode(encode(tx))
+      assert(rt.body.timeoutHeight == v && rt.authInfo.signerInfos.head.sequence == v &&
+        rt.authInfo.fee.get.gasLimit == v)
+      val json = toJson(rt)
+      assert(json == s"""{"body":{"timeoutHeight":"$text"},"authInfo":{"signerInfos":[{"sequence":"$text"}],""" +
+        s""""fee":{"gasLimit":"$text"}}}""", json)
+      val matched = JsonPathLite.exists(mapper.readTree(json),
+        JsonPathLite.compile("$.body[?(@.timeoutHeight == '18446744073709551615')]"))
+      assert(matched == (v == -1L))
+    }
+  }
+
   test("property: varint round-trip incl. extreme values") {
     val rnd = new scala.util.Random(7)
     val cases = Seq(0L, 1L, 127L, 128L, Long.MaxValue, -1L, Long.MinValue) ++
