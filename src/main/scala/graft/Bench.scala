@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   private def loadavg: String =
     try scala.io.Source.fromFile("/proc/loadavg").mkString.split(" ").take(3).mkString(" ")
@@ -72,30 +71,17 @@ object Bench {
     clean.dropRight(1) +
       s""","source":"clean_capture_sidecar","live_total":$liveTotal,"live_load_before":"$liveLoadBefore","live_contaminated":true}"""
 
+  /** The SF directory the bench times, and `graft.tools.Cli` probes. */
+  private[graft] def sfDir: String =
+    sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
   def main(args: Array[String]): Unit = {
     val loadBefore = loadavg
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Tables.epochMicros' TIMESTAMP_NTZ branch goes through a session-TZ
-      // dependent cast; outside sbt (which injects -Duser.timezone=UTC) a
-      // non-UTC host would silently shift every event-time value in the
-      // temporal query family. Pin it here like GraftSession/Verify do.
-      .config("spark.sql.session.timeZone", "UTC")
-      // data-volume-targeted reduce coalescing (see GraftSession.builder)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // ad-hoc experiment hook: SPARK_GRAFT_CONF="k=v;k=v" runtime confs
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').filter(_.nonEmpty).foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) => spark.conf.set(k, v)
-        case _ => sys.error(s"SPARK_GRAFT_CONF entry '$kv' is not key=value")
-      }
-    })
+    val sfDir = Bench.sfDir
+    // SPARK_GRAFT_ONLY="q_a,q_b" times just those queries (see SparkEntry.selected)
+    val picked = SparkEntry.selected()
+    val cpus = GraftSession.defaultCores.toString
+    val spark = GraftSession.local("graft-bench")
     // pin input tables in memory once: 40+ sequential queries would
     // otherwise each pay parquet footer reads + stats derivation
     graft.sources.Tables.preload(spark, sfDir)
@@ -105,7 +91,7 @@ object Bench {
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
     if (new java.io.File(warmDir).isDirectory && warmDir != sfDir) {
       graft.sources.Tables.preload(spark, warmDir)
-      SparkEntry.queries.foreach { case (name, fn) =>
+      picked.foreach { case (name, fn) =>
         try fn(spark, warmDir).write.mode("overwrite").format("noop").save()
         catch { case e: Throwable => System.err.println(s"[bench] warmup $name: ${e.getMessage}") }
         graft.sources.Tables.evictPinned(spark, blocking = true)
@@ -138,13 +124,12 @@ object Bench {
     // otherwise hide under the bench's own load (the round-16 ADVICE:
     // dropping the exit-load check left mid-run arrivals that produce
     // no stall suspect undetected)
-    val sorted = SparkEntry.queries.toSeq.sortBy(_._1)
-    val streamIdx = sorted.indexWhere(_._1.startsWith("q_stream"))
+    val streamIdx = picked.indexWhere(_._1.startsWith("q_stream"))
     val probeAt: Set[Int] = Set(
-      (if (streamIdx > 0) streamIdx else sorted.size) / 2,
+      (if (streamIdx > 0) streamIdx else picked.size) / 2,
       if (streamIdx > 0) streamIdx else -1) - -1
     val midBusy = scala.collection.mutable.ArrayBuffer.empty[(Int, Double)]
-    val results = sorted.zipWithIndex.map { case ((name, fn), qi) =>
+    val results = picked.zipWithIndex.map { case ((name, fn), qi) =>
       if (probeAt(qi)) midBusy += qi -> idleBusyFrac()
       val times = (1 to passes).map { _ =>
         val t0 = System.nanoTime()
@@ -265,11 +250,13 @@ object Bench {
       val cleanFile = java.nio.file.Paths.get(cleanCapturePath(sfDir, cpus))
       if (!contaminated) {
         // persist this clean capture for a later contaminated run of
-        // the SAME query set (see CleanCapturePath)
-        try java.nio.file.Files.writeString(cleanFile,
-          fingerprint + "\n" + compactLine(1450, "") + "\n")
-        catch { case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[bench] clean-capture write failed: ${e.getMessage}") }
+        // the SAME query set (see CleanCapturePath); a SPARK_GRAFT_ONLY
+        // subset run must not replace the full suite's capture
+        if (picked.size == SparkEntry.queries.size)
+          try java.nio.file.Files.writeString(cleanFile,
+            fingerprint + "\n" + compactLine(1450, "") + "\n")
+          catch { case scala.util.control.NonFatal(e) =>
+            System.err.println(s"[bench] clean-capture write failed: ${e.getMessage}") }
         println(compactLine(1700, ""))
       } else {
         val embedded =

@@ -24,14 +24,29 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .withExtensions(new graft.plans.GraftExtensions)
 
-  /** Local session sized for this machine (tests/harness). */
-  def local(appName: String = "graft", cores: Int = Runtime.getRuntime.availableProcessors): SparkSession = {
+  /** Cores of a local session: `SPARK_GRAFT_CPUS`, else every processor
+    * the JVM sees.
+    */
+  lazy val defaultCores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** Local session sized for this machine: the one every main, tool, test
+    * and benchmark runs on. `SPARK_GRAFT_CONF="k=v;k=v"` sets runtime
+    * confs on it, for experiments.
+    */
+  def local(appName: String = "graft", cores: Int = defaultCores): SparkSession = {
     val s = builder(appName)
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').filter(_.nonEmpty).foreach { kv =>
+      kv.split("=", 2) match {
+        case Array(k, v) => s.conf.set(k, v)
+        case _ => sys.error(s"SPARK_GRAFT_CONF entry '$kv' is not key=value")
+      }
+    })
     s
   }
 }

@@ -320,15 +320,7 @@ object M5Queries {
   private def shardExportDir(s: SparkSession, dir: String): String =
     builtShardExports.computeIfAbsent(dir, _ => {
       val tag = s"shards_${java.lang.Integer.toHexString(dir.hashCode)}"
-      val exDir = sys.env.get("SPARK_GRAFT_INDEX_DIR") match {
-        case Some(root) => s"$root/$tag"
-        case None =>
-          val d = s"${System.getProperty("java.io.tmpdir")}/graft_${tag}_p${
-            ProcessHandle.current().pid()}"
-          Runtime.getRuntime.addShutdownHook(new Thread(() =>
-            deleteRecursively(new java.io.File(d))))
-          d
-      }
+      val exDir = artifactDir(tag)
       Curation.writeTrainingShards(TextDedup.documents(s, dir), exDir, nShards = 8)
       exDir
     })
@@ -345,15 +337,7 @@ object M5Queries {
   private def windowExportDir(s: SparkSession, dir: String): String =
     builtWindowExports.computeIfAbsent(dir, _ => {
       val tag = s"winshards_${java.lang.Integer.toHexString(dir.hashCode)}"
-      val exDir = sys.env.get("SPARK_GRAFT_INDEX_DIR") match {
-        case Some(root) => s"$root/$tag"
-        case None =>
-          val d = s"${System.getProperty("java.io.tmpdir")}/graft_${tag}_p${
-            ProcessHandle.current().pid()}"
-          Runtime.getRuntime.addShutdownHook(new Thread(() =>
-            deleteRecursively(new java.io.File(d))))
-          d
-      }
+      val exDir = artifactDir(tag)
       val docs = TextDedup.documents(s, dir)
       val merges = graft.operators.Bpe.mergePairs(
         graft.operators.Bpe.trainMerges(docs, frag.bpeMerges))
@@ -384,15 +368,7 @@ object M5Queries {
   private def ivfPqIndexDir(emb: => DataFrame, dir: String): String =
     builtIvfPqIndexes.computeIfAbsent(dir, _ => {
       val tag = s"ivfpq_${java.lang.Integer.toHexString(dir.hashCode)}"
-      val ixDir = sys.env.get("SPARK_GRAFT_INDEX_DIR") match {
-        case Some(root) => s"$root/$tag"
-        case None =>
-          val d = s"${System.getProperty("java.io.tmpdir")}/graft_${tag}_p${
-            ProcessHandle.current().pid()}"
-          Runtime.getRuntime.addShutdownHook(new Thread(() =>
-            deleteRecursively(new java.io.File(d))))
-          d
-      }
+      val ixDir = artifactDir(tag)
       Similarity.writeIvfPqIndex(emb, ixDir)
       ixDir
     })
@@ -415,15 +391,7 @@ object M5Queries {
   private def ivfPqAppendIndexDir(emb: => DataFrame, dir: String): String =
     builtIvfPqAppendIndexes.computeIfAbsent(dir, _ => {
       val tag = s"ivfpqa_${java.lang.Integer.toHexString(dir.hashCode)}"
-      val ixDir = sys.env.get("SPARK_GRAFT_INDEX_DIR") match {
-        case Some(root) => s"$root/$tag"
-        case None =>
-          val d = s"${System.getProperty("java.io.tmpdir")}/graft_${tag}_p${
-            ProcessHandle.current().pid()}"
-          Runtime.getRuntime.addShutdownHook(new Thread(() =>
-            deleteRecursively(new java.io.File(d))))
-          d
-      }
+      val ixDir = artifactDir(tag)
       val e = emb
       val n = e.count()
       Similarity.writeIvfPqIndex(e.filter(col("vec_id") * 2 < n), ixDir)
@@ -478,15 +446,7 @@ object M5Queries {
   private def ivfPqRetrainedIndexDir(emb: => DataFrame, dir: String): String =
     builtIvfPqRetrainedIndexes.computeIfAbsent(dir, _ => {
       val tag = s"ivfpqr_${java.lang.Integer.toHexString(dir.hashCode)}"
-      val ixDir = sys.env.get("SPARK_GRAFT_INDEX_DIR") match {
-        case Some(root) => s"$root/$tag"
-        case None =>
-          val d = s"${System.getProperty("java.io.tmpdir")}/graft_${tag}_p${
-            ProcessHandle.current().pid()}"
-          Runtime.getRuntime.addShutdownHook(new Thread(() =>
-            deleteRecursively(new java.io.File(d))))
-          d
-      }
+      val ixDir = artifactDir(tag)
       val e = emb
       val n = e.count()
       Similarity.writeIvfPqIndex(e.filter(col("vec_id") * 2 < n), ixDir)
@@ -494,6 +454,18 @@ object M5Queries {
       Similarity.retrainIvfPqIndex(e, ixDir)
       ixDir
     })
+
+  /** Where a build-once-per-process artifact named `tag` lives (see
+    * [[ivfPqIndexDir]]): under `SPARK_GRAFT_INDEX_DIR` if set, else in a
+    * PID-salted temp dir deleted on JVM exit.
+    */
+  private def artifactDir(tag: String): String = sys.env.get("SPARK_GRAFT_INDEX_DIR") match {
+    case Some(root) => s"$root/$tag"
+    case None =>
+      val d = s"${System.getProperty("java.io.tmpdir")}/graft_${tag}_p${ProcessHandle.current().pid()}"
+      Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRecursively(new java.io.File(d))))
+      d
+  }
 
   private def deleteRecursively(f: java.io.File): Unit = {
     val children = f.listFiles()

@@ -280,6 +280,22 @@ object SparkEntry {
     }),
   )
 
+  /** The queries a run covers, in name order: those `only` lists
+    * ("q_a,q_b", `SPARK_GRAFT_ONLY` by default), or all when it is unset.
+    * An unknown name fails, so a typo cannot select nothing.
+    */
+  def selected(only: Option[String] = sys.env.get("SPARK_GRAFT_ONLY"))
+      : Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val all = queries.toSeq.sortBy(_._1)
+    only.fold(all) { list =>
+      val names = list.split(',').map(_.trim).filter(_.nonEmpty).toSet
+      val unknown = names -- all.map(_._1)
+      require(names.nonEmpty && unknown.isEmpty,
+        s"'$list' must name known queries; unknown: ${unknown.toSeq.sorted.mkString(", ")}")
+      all.filter(q => names(q._1))
+    }
+  }
+
   /** Rules for q_proto_dispatch: type-discriminator, pinned from-address
     * (multicast with rule 0 for user_id=7 purchases), never-matching path —
     * the rules_example.yaml shape over synthesized transactions.

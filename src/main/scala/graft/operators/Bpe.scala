@@ -370,7 +370,7 @@ object Bpe {
     * instead of `merges.length` chained HOF folds — the apply-side
     * scale path: the fold spelling's expression tree grows linearly in
     * the merge count, and the limit is MEASURED, not estimated
-    * ([[graft.tools.FoldDepthBench]], FOLDDEPTH_r13.json, sf0.1): at 64
+    * (FOLDDEPTH_r13.json; SCALE.md, round 13, sf0.1): at 64
     * merges the fold plan FAILS ANALYSIS outright under default confs
     * (`Max iterations (100) reached for batch Resolution` — the nested
     * HOF tree exceeds the analyzer's fixed-point budget) and costs

@@ -24,8 +24,8 @@ import org.apache.spark.sql.functions._
   * dense numbering — for one doc-keyed window (h−1 `lead`s share one
   * sort) plus ONE range exchange, where doubling paid (window exchange
   * + range exchange + full-corpus localCheckpoint) PER ROUND (guide
-  * §2.4/§5; the round-19 collapse — AbProbe `suffix` keeps the doubling
-  * spelling for the paired comparison).
+  * §2.4/§5; the round-19 collapse — OPTIMIZATION_r19.md §10 records the
+  * paired comparison against the doubling spelling).
   *
   * Scale shape — O(1) linear passes, never a comparison sort of
   * strings:

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.{ProtoTx, TxDispatchPipeline}
+import graft.operators.ProtoTx
 import graft.rules.TxDispatchRules
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -11,7 +11,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * TopologyProducer.kt:84–202): unbounded Kafka in, three-way routed Kafka
   * out, stateless.
   *
-  * The SAME `DataFrame → DataFrame` core ([[TxDispatchPipeline]] /
+  * The SAME `DataFrame → DataFrame` core ([[graft.operators.TxDispatchPipeline]] /
   * [[ProtoTx]]) serves batch (verify/bench harness) and streaming — the
   * plan is stateless (project + generate + filter, no watermark, no state
   * store, no shuffle), so Spark runs it continuously with per-partition
@@ -100,15 +100,4 @@ object DispatchStream {
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, id: Long) => writer(batch, id) }
       .start()
-
-  /** Streaming JSON-twin routing (the batch harness's events shape):
-    * inputs with `key` + `txJson` columns, e.g. from a JSON-lines Kafka
-    * topic.
-    */
-  def routeJson(
-      stream: DataFrame,
-      rules: TxDispatchRules,
-      dlqTopic: String = "dlq",
-      errorTopic: Option[String] = Some("error")): DataFrame =
-    TxDispatchPipeline(stream, rules, dlqTopic, errorTopic)
 }

@@ -32,6 +32,32 @@ class ContractSpec extends AnyFunSuite {
     }
   }
 
+  test("SPARK_GRAFT_ONLY selection: name order, trimmed names, and a typo fails") {
+    assert(SparkEntry.selected(None).map(_._1) == SparkEntry.queries.keys.toSeq.sorted)
+    assert(SparkEntry.selected(Some(" q_tx_json, q_source_scan")).map(_._1) ==
+      Seq("q_source_scan", "q_tx_json"))
+    val typo = intercept[IllegalArgumentException](
+      SparkEntry.selected(Some("q_source_scan,q_tx_jsn")))
+    assert(typo.getMessage.contains("q_tx_jsn"))
+    intercept[IllegalArgumentException](SparkEntry.selected(Some(",")))
+  }
+
+  test("GraftSession is the only place a SparkSession is built") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val builder = """SparkSession\s*\.\s*builder\b""".r
+    def scalaFiles(root: String): Seq[Path] = {
+      val walk = Files.walk(Paths.get(root))
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    }
+    val builders = Seq("src/main", "src/test").flatMap(scalaFiles)
+      .filter(p => p.getFileName.toString != "GraftSession.scala" &&
+        builder.findFirstIn(Files.readString(p)).isDefined)
+    assert(scalaFiles("src/main").exists(_.getFileName.toString == "GraftSession.scala"))
+    assert(builders.isEmpty, s"SparkSession built outside GraftSession: ${builders.mkString(", ")}")
+  }
+
   // ---- exactness invariant (round-1 lesson: 6 hash failures came from
   // fp-aggregation / type drift the old checks couldn't see) ----
 

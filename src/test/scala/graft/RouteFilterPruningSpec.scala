@@ -10,15 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class RouteFilterPruningSpec extends AnyFunSuite {
 
-  // `withExtensions` is ignored by getOrCreate when a session already
-  // exists (the shared test session), so enable the rule through the
-  // public runtime hook instead — semantics-preserving, safe to leave on.
-  lazy val spark: SparkSession = {
-    val s = SparkTestSession.spark
-    if (!s.experimental.extraOptimizations.contains(graft.plans.RouteFilterPruning))
-      s.experimental.extraOptimizations ++= Seq(graft.plans.RouteFilterPruning)
-    s
-  }
+  lazy val spark: SparkSession = SparkTestSession.spark
 
   val sf = "/root/testdata/sf0.001"
 
@@ -105,6 +97,17 @@ class RouteFilterPruningSpec extends AnyFunSuite {
       .filter(col("topic") === EventsTx.rules.rules.head.topic)
     assert(!covered.queryExecution.optimizedPlan
       .exists(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Generate]))
+  }
+
+  test("the shared session is the production session: GraftExtensions supplies the rule and the SQL functions") {
+    assert(spark.experimental.extraOptimizations.isEmpty)
+    val optimized = routes.filter(col("route") === 0).queryExecution.optimizedPlan
+    assert(!optimized.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Generate]),
+      s"RouteFilterPruning did not run:\n$optimized")
+    // a new session shares the extensions but none of the functions
+    // JsonPathFunctions.register may have added to the shared one
+    val fresh = spark.newSession()
+    assert(fresh.sql("""SELECT json_path_exists('{"a": 1}', '$.a')""").head().getBoolean(0))
   }
 
   test("full dispatch results are unchanged with extensions active") {
