@@ -3,7 +3,7 @@ package graft.functions
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -103,10 +103,11 @@ case class JsonPathExists(child: Expression, path: String)
   * once (TopologyProducer.kt:213) — and feeds `explode` for the multicast
   * (TopologyProducer.kt:97–105).
   *
-  * Per rule, the cost is one [[JsonPathLite.exists]] walk that stops at the
-  * rule's first match and builds no node lists: a rule that matches early
-  * visits a few nodes, and only a rule that matches nothing visits all the
-  * nodes its path can reach.
+  * The rules are evaluated as one [[JsonPathLite.RuleSet]]: rules that
+  * differ only in the string an `==` or `in` filter tests for share one
+  * walk, so a document costs one walk per such group plus one
+  * [[JsonPathLite.exists]] walk per other rule. Each walk stops once it has
+  * nothing left to match and builds no node lists.
   */
 case class JsonPathRoutes(
     child: Expression,
@@ -119,8 +120,7 @@ case class JsonPathRoutes(
   override def nullable: Boolean = errorRoute.isEmpty
   override def prettyName: String = "json_path_routes"
 
-  @transient private lazy val compiled: Array[Option[JsonPathLite.Compiled]] =
-    paths.map(p => Try(JsonPathLite.compile(p)).toOption).toArray
+  @transient private lazy val rules = new JsonPathLite.RuleSet(paths)
   @transient private lazy val errorResult =
     errorRoute.map(e => new GenericArrayData(Array(e))).orNull
   @transient private lazy val unfilteredResult =
@@ -136,21 +136,9 @@ case class JsonPathRoutes(
     if (json == null) return errorResult
     val doc = JsonDocs.parseAny(json)
     if (doc == null) return errorResult
-    val matched = new scala.collection.mutable.ArrayBuffer[Int](compiled.length)
-    var i = 0
-    while (i < compiled.length) {
-      compiled(i) match {
-        case Some(p) =>
-          val hit =
-            try JsonPathLite.exists(doc, p)
-            catch { case NonFatal(_) => false } // rule isolation
-          if (hit) matched += i
-        case None => // uncompilable rule: logged-and-skipped in the reference
-      }
-      i += 1
-    }
+    val matched = rules.matching(doc)
     if (matched.isEmpty && unfilteredResult.isDefined) unfilteredResult.get
-    else new GenericArrayData(matched.toArray)
+    else UnsafeArrayData.fromPrimitiveArray(matched)
   }
 
   override def eval(input: InternalRow): Any = routesFor(child.eval(input))

@@ -6,6 +6,8 @@ import java.util.{Collections, IdentityHashMap}
 import java.util.regex.Pattern
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
+import scala.util.Try
+import scala.util.control.NonFatal
 
 /** A small, dependency-free JsonPath evaluator implementing the Jayway
   * JsonPath subset the dispatch rules need (reference:
@@ -59,7 +61,7 @@ import scala.jdk.CollectionConverters._
   *    calls `matcher.matches()`); non-strings never match;
   *  - `in [..]` / `nin [..]` test membership against literal lists.
   *
-  * Evaluation is one depth-first walk with two sinks. Each step hands every
+  * Evaluation is one depth-first walk into a sink. Each step hands every
   * node it selects straight to the steps after it; a node that passes the
   * last step goes to the sink. [[exists]]'s sink stops the walk at the first
   * full match, so a rule costs the nodes visited until then and builds no
@@ -68,6 +70,10 @@ import scala.jdk.CollectionConverters._
   * order of applying each step to the previous step's whole result).
   * Operators, literals and regexes are resolved once by [[compile]], and
   * definite filter operands (`@.a[0].b`) are read by walking straight down.
+  *
+  * A whole rule set is evaluated by [[RuleSet]]: rules that differ only in
+  * the string they test for equality share one walk, so a document costs
+  * one walk per such group plus one [[exists]] walk per other rule.
   *
   * Evaluation never throws on well-formed compiled paths; `compile` throws
   * `JsonPathSyntaxException` on malformed input (callers isolate per rule,
@@ -129,7 +135,7 @@ object JsonPathLite {
   private val ops = Seq("==", "!=", "<", "<=", ">", ">=", "=~", "in", "nin")
   private final val Eq = 0; private final val Ne = 1; private final val Lt = 2
   private final val Le = 3; private final val Gt = 4; private final val Ge = 5
-  private final val Nin = 8
+  private final val In = 7; private final val Nin = 8
 
   sealed trait Lit
   final case class SLit(s: String) extends Lit
@@ -647,6 +653,117 @@ object JsonPathLite {
       case BLit(b) if op == Eq || op == Ne => (v.isBoolean && v.booleanValue == b) == (op == Eq)
       case NullLit if op == Eq || op == Ne => v.isNull == (op == Eq)
       case _ => op == Ne // both sides exist with different types
+    }
+  }
+
+  // -------------------------------------------------------------- rule sets
+
+  /** A rule set, evaluated against one document at a time.
+    *
+    * A rule `<prefix>[?(@.<relpath> == 's')]` or `<prefix>[?(@.<relpath> in
+    * ['s', …])]`, with the filter step plain or under `..`, joins the group
+    * keyed by (prefix, `..` or not, relpath). A group of two or more rules
+    * is walked once with a filter that always holds, so the sink sees
+    * exactly the nodes each member's filter would test; it resolves the
+    * relpath there and looks a text value up in a map from literal to
+    * member indices. `== 's'` and `in ['s', …]` hold only for a text node
+    * equal to `s`, so this is exact. The walk stops once every member has
+    * matched. Every other rule, a group of one included, keeps its own
+    * [[exists]] walk, and a rule that fails to compile never matches.
+    */
+  final class RuleSet(paths: Seq[String]) {
+    private val compiled: Array[Option[Compiled]] =
+      paths.map(p => Try(compile(p)).toOption).toArray
+
+    private val (groups, solos): (Array[TextGroup], Array[Int]) = {
+      val keyed = compiled.indices.flatMap(i => compiled(i).flatMap(textEquality).map(i -> _))
+      val shared = keyed.groupBy(_._2._1).filter(_._2.length > 1)
+      val grouped = shared.values.flatten.map(_._1).toSet
+      (shared.map { case (key, ms) => new TextGroup(key, ms.map { case (i, (_, lits)) => i -> lits }) }.toArray,
+        compiled.indices.filter(i => compiled(i).isDefined && !grouped(i)).toArray)
+    }
+
+    /** Walks per document at most: one per group, one per other rule. */
+    def walks: Int = groups.length + solos.length
+
+    /** Indices of the rules that select at least one node of `root`, in
+      * declaration order. A rule whose walk throws does not match.
+      */
+    def matching(root: JsonNode): Array[Int] = {
+      val hit = new Array[Boolean](compiled.length)
+      if (root != null && !root.isMissingNode) {
+        groups.foreach(_.run(root, hit))
+        solos.foreach { i =>
+          hit(i) = try exists(root, compiled(i).get) catch { case NonFatal(_) => false }
+        }
+      }
+      val out = new Array[Int](hit.count(identity))
+      var n = 0
+      var i = 0
+      while (i < hit.length) {
+        if (hit(i)) { out(n) = i; n += 1 }
+        i += 1
+      }
+      out
+    }
+  }
+
+  /** What the members of one shared walk have in common. */
+  private final case class TextKey(prefix: Seq[Step], deep: Boolean, relpath: Seq[Step])
+
+  /** The group key and the literals of a rule whose last step is a plain
+    * or `..` filter `@.<relpath> == 's'` or `@.<relpath> in ['s', …]`.
+    */
+  private def textEquality(c: Compiled): Option[(TextKey, Seq[String])] = {
+    val (deep, pred) = c.steps.lastOption match {
+      case Some(FilterStep(p))       => (false, p)
+      case Some(Deep(FilterStep(p))) => (true, p)
+      case _                         => return None
+    }
+    def key(rel: Array[Step]) = TextKey(c.steps.init.toSeq, deep, rel.toSeq)
+    pred match {
+      case Cmp(rel, Eq, SLit(s)) => Some(key(rel) -> Seq(s))
+      case Cmp(rel, In, LLit(items)) if items.forall(_.isInstanceOf[SLit]) =>
+        Some(key(rel) -> items.collect { case SLit(s) => s })
+      case _ => None
+    }
+  }
+
+  /** The rules of one [[TextKey]], given as (rule index, literals). */
+  private final class TextGroup(key: TextKey, members: Seq[(Int, Seq[String])]) {
+    private val steps: Array[Step] = {
+      val all = FilterStep(And(Nil))
+      (key.prefix :+ (if (key.deep) Deep(all) else all)).toArray
+    }
+    private val relpath = key.relpath.toArray
+    private val byText = new java.util.HashMap[String, Array[Int]]()
+    members.flatMap { case (i, lits) => lits.distinct.map(_ -> i) }.groupMap(_._1)(_._2)
+      .foreach { case (s, is) => byText.put(s, is.toArray) }
+    private val live = members.count(_._2.nonEmpty)
+
+    /** Mark every member that matches `root` in `hit`. Each member's own
+      * walk visits the same nodes in the same order up to its first match,
+      * and a filter never throws, so a walk that throws leaves exactly the
+      * hits the members' own walks would have found.
+      */
+    def run(root: JsonNode, hit: Array[Boolean]): Unit = {
+      var pending = live
+      val sink: JsonNode => Boolean = { node =>
+        val v = resolve(node, relpath)
+        if (v != null && v.isTextual) {
+          val rs = byText.get(v.textValue)
+          if (rs != null) {
+            var j = 0
+            while (j < rs.length) {
+              if (!hit(rs(j))) { hit(rs(j)) = true; pending -= 1 }
+              j += 1
+            }
+          }
+        }
+        pending == 0
+      }
+      try new Eval(root, steps, sink, collect = false).walk(0, root)
+      catch { case NonFatal(_) => () }
     }
   }
 

@@ -5,7 +5,7 @@ Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir> [skip1,skip2,...]
 
 Reads each <verifyOutDir>/<name>/ parquet (Spark result), runs
 <verifyOutDir>/oracle_sql.json[name] in DuckDB with each testdata table
-registered as a view, and requires:
+registered as a view, stores both sides once as temp tables, and requires:
   1. identical (column, duckdb-type) sets — HUGEINT vs BIGINT, DECIMAL
      scale drift, etc. all fail loudly here (round 1 lesson: the driver's
      hasher is type/rendering sensitive; pandas check_dtype=False hid it);
@@ -34,9 +34,11 @@ def main(sf_dir, out_dir, skip=()):
         if not files:
             print(f"MISSING  {name}: no spark result");  n_bad += 1;  continue
         try:
-            con.execute("DROP VIEW IF EXISTS _got; DROP VIEW IF EXISTS _exp")
-            con.execute(f"CREATE VIEW _got AS SELECT * FROM read_parquet({files!r})")
-            con.execute(f"CREATE VIEW _exp AS {sql}")
+            # the oracle SQL runs once, not once per count and per
+            # EXCEPT ALL side
+            con.execute("DROP TABLE IF EXISTS _got; DROP TABLE IF EXISTS _exp")
+            con.execute(f"CREATE TEMP TABLE _got AS SELECT * FROM read_parquet({files!r})")
+            con.execute(f"CREATE TEMP TABLE _exp AS {sql}")
             got_t = sorted([(r[0], r[1]) for r in con.execute("DESCRIBE _got").fetchall()])
             exp_t = sorted([(r[0], r[1]) for r in con.execute("DESCRIBE _exp").fetchall()])
         except Exception as e:
