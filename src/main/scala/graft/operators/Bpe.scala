@@ -23,13 +23,10 @@ import org.apache.spark.sql.functions._
   * map-side-combinable pair-count aggregation over the word table
   * (itself the one-time token hash-agg of the corpus — at 100 TB the
   * distinct-word table is millions of rows, not corpus-sized); the only
-  * driver state is the argmax pair per iteration (one row) and the
-  * accumulated merge table (`numMerges` rows). The per-word merge
-  * rewrite is a narrow HOF fold. Each iteration ends in a
-  * `localCheckpoint` handoff: the loop would otherwise chain
-  * `numMerges` lambda folds into one plan whose analysis cost compounds
-  * (the [[Curation.curationPipeline]] lesson), and each re-count would
-  * recompute every earlier rewrite.
+  * driver state is the top candidate pairs per iteration (a few rows)
+  * and the accumulated merge table (`numMerges` rows). The per-word merge
+  * rewrite is a narrow HOF fold; the rounds, folds and lineage cuts are
+  * [[MergeTrainer]]'s, shared with [[WordPiece]].
   *
   * Determinism: counts are exact integers; the argmax tie rule is a
   * total order; greedy left-to-right merging is order-free per word —
@@ -94,11 +91,9 @@ object Bpe {
       .select(w.as("word"), col("cnt"), split(w, "").as("syms"))
   }
 
-  /** One greedy left-to-right merge of (l, r) in a symbol array: fold
-    * each symbol onto the accumulator; when the accumulator's last
-    * element is `l` and the incoming symbol is `r`, replace the tail
-    * with the fused symbol (repeated-pair runs merge pairwise,
-    * "aaa" + (a,a) → ["aa","a"] — the standard BPE scan).
+  /** One greedy left-to-right merge of (l, r) in a symbol array — the
+    * [[MergeTrainer.fuseBatch]] scan for one pair, as [[segmentStats]]
+    * applies a frozen table inside `transform`.
     */
   private def mergeFold(syms: org.apache.spark.sql.Column, l: String, r: String) =
     aggregate(syms, array().cast("array<string>"), (acc, ch) =>
@@ -106,182 +101,80 @@ object Bpe {
         concat(slice(acc, lit(1), size(acc) - 1), array(lit(l + r))))
         .otherwise(concat(acc, array(ch))))
 
-  /** Corpus-weighted adjacent-pair counts of the current symbol table —
-    * ONE map-side-combinable aggregation, the per-round corpus-sized
-    * work of both trainers.
-    */
-  private def pairCounts(words: DataFrame): DataFrame =
-    words
-      .select(col("cnt"),
-        explode(zip_with(
-          slice(col("syms"), lit(1), size(col("syms")) - 1),
-          slice(col("syms"), lit(2), size(col("syms")) - 1),
-          (a, b) => struct(a.as("l"), b.as("r")))).as("p"))
-      .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-      .agg(sum(col("cnt")).as("c"))
+  /** BPE's candidate order: pair count DESC, then (l, r) ASC. */
+  private def byCount(words: DataFrame): DataFrame =
+    MergeTrainer.pairCounts(words).orderBy(col("c").desc, col("l"), col("r"))
 
-  /** Train `numMerges` merges over the corpus. Output: one row per
-    * merge, (rank, left, right, pair_count), rank 0-based in training
-    * order. Requires the corpus to support `numMerges` non-empty pair
-    * counts (a degenerate corpus that runs dry raises — silent
-    * truncation would desynchronize the oracle twin).
+  /** Run the [[MergeTrainer]] rounds over `words` and emit (rank, round,
+    * left, right, pair_count).
+    */
+  private def trained(words: MergeTrainer.Words, rounds: Int, batchSize: Int,
+      cap: Int, firstRank: Int): DataFrame = {
+    val merges = MergeTrainer.train(words, rounds, batchSize, cap, firstRank,
+      byCount, _ + _)
+    words.df.sparkSession.createDataFrame(merges.map(m =>
+        (m.rank, m.round, m.left, m.right, m.counts.getAs[Long]("c"))))
+      .toDF("rank", "round", "left", "right", "pair_count")
+  }
+
+  /** Train `numMerges` merges over the corpus: [[trainMergesBatched]] at
+    * `batchSize = 1`, one merge per round. Output: one row per merge,
+    * (rank, left, right, pair_count), rank 0-based in training order.
+    * Requires the corpus to support `numMerges` non-empty pair counts
+    * (a degenerate corpus that runs dry raises — silent truncation
+    * would desynchronize the oracle twin).
     */
   def trainMerges(docs: DataFrame, numMerges: Int,
       byteLevel: Boolean = false, pretok: Boolean = false): DataFrame = {
     require(numMerges >= 1, s"numMerges must be >= 1, got $numMerges")
-    val spark = docs.sparkSession
-    var words = wordTable(docs, byteLevel = byteLevel, pretok = pretok)
-      .localCheckpoint()
-    val merges = Seq.newBuilder[(Int, String, String, Long)]
-    // Checkpoint CADENCE, not checkpoint-per-round (guide §5): the
-    // per-round rewrite is one narrow fold over the word-TYPE table, so
-    // chaining up to [[FoldCheckpointEvery]] folds between cuts trades a
-    // bounded re-execution of cheap per-row folds for one fewer
-    // materialization job per round — the round-18 spelling paid a full
-    // word-table materialization after EVERY merge (2 jobs/round), and
-    // the FINAL round's fold+checkpoint built a table nobody reads.
-    // Plan depth stays 4× under the measured 64-fold analysis cliff
-    // (FOLDDEPTH_r13, the extendMerges grouped(16) bound). Prior
-    // checkpoint blocks free via GC/ContextCleaner once unreferenced
-    // (localCheckpoint blocks are not CacheManager entries — the
-    // TextDedup.distributedClusters house pattern).
-    var foldsSinceCut = 0
-    for (rank <- 0 until numMerges) {
-      val top = pairCounts(words)
-        .orderBy(col("c").desc, col("l"), col("r"))
-        .limit(1).collect()
-      require(top.nonEmpty,
-        s"corpus ran out of symbol pairs after $rank merges (asked for $numMerges)")
-      val (l, r, c) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-      merges += ((rank, l, r, c))
-      if (rank < numMerges - 1) { // the last fold's table is never read
-        words = words.withColumn("syms", mergeFold(col("syms"), l, r))
-        foldsSinceCut += 1
-        if (foldsSinceCut >= FoldCheckpointEvery) {
-          words = words.localCheckpoint()
-          foldsSinceCut = 0
-        }
-      }
-    }
-    spark.createDataFrame(merges.result())
-      .toDF("rank", "left", "right", "pair_count")
+    trainMergesBatched(docs, numMerges, 1, byteLevel = byteLevel, pretok = pretok)
+      .drop("round")
   }
-
-  /** Lineage-cut cadence for the sequential trainers' per-round word
-    * rewrites: every 16 chained [[mergeFold]]s — 4× under the measured
-    * 64-fold Catalyst analysis cliff (FOLDDEPTH_r13.json), the same
-    * bound [[extendMerges]] applies to prior replay.
-    */
-  private[operators] val FoldCheckpointEvery = 16
 
   /** WARM-START training — EXTEND a frozen merge table with
     * `extraMerges` further merges trained on `docs` (the
     * domain-adaptation move: a base tokenizer grows vocabulary on a new
     * corpus without retraining from characters). The prior table is
-    * applied first (rank order, the same greedy fold as training would
-    * have), then training continues; because BPE training is
-    * greedy-sequential, extending on the SAME corpus the prior was
-    * trained on is exactly the longer run's suffix
-    * (`extendMerges(docs, first k of trainMerges(docs, n), n−k) ≡
-    * rows k..n−1 of trainMerges(docs, n)` — BpeSpec pins it, and the
-    * oracle gates the composition as the long chain's tail). Output
-    * ranks continue after the prior (`prior.length`-based).
+    * folded first, one merge at a time in rank order under the
+    * [[MergeTrainer.FoldCheckpointEvery]] cut (so a prior of any depth
+    * analyzes), then the [[MergeTrainer]] rounds continue at
+    * `batchSize = 1`. Because BPE training is greedy-sequential,
+    * extending on the SAME corpus the prior was trained on is exactly
+    * the longer run's suffix (`extendMerges(docs, first k of
+    * trainMerges(docs, n), n−k) ≡ rows k..n−1 of trainMerges(docs, n)`
+    * — BpeSpec pins it, and the oracle gates the composition as the
+    * long chain's tail). Output ranks continue after the prior
+    * (`prior.length`-based).
     */
   def extendMerges(docs: DataFrame, prior: Seq[(String, String)],
       extraMerges: Int): DataFrame = {
     require(extraMerges >= 1, s"extraMerges must be >= 1, got $extraMerges")
-    val spark = docs.sparkSession
-    // the prior applies as chained mergeFold HOFs, localCheckpointed
-    // every 16 merges: FOLDDEPTH_r13.json measures stock Catalyst
-    // analysis FAILING at 64 chained folds (Max iterations reached), so
-    // an unbroken application of a realistically sized prior — the
-    // operator's whole domain-adaptation purpose — would never analyze.
-    // Sixteen stays 4× under the measured cliff and each checkpoint cuts
-    // the lineage, so plan depth is bounded regardless of |prior|.
-    var words = wordTable(docs).localCheckpoint()
-    prior.grouped(16).foreach { grp =>
-      words = grp.foldLeft(words) { case (w, (l, r)) =>
-        w.withColumn("syms", mergeFold(col("syms"), l, r))
-      }.localCheckpoint()
+    val words = prior.foldLeft(MergeTrainer.Words(wordTable(docs).localCheckpoint())) {
+      case (w, (l, r)) => w.fold(Seq((l, r, l + r)))
     }
-    val merges = Seq.newBuilder[(Int, String, String, Long)]
-    // final-round fold skipped, chained fold cadence otherwise — the
-    // trainMerges discipline (checkpoint every FoldCheckpointEvery
-    // folds, not every round)
-    var foldsSinceCut = 0
-    for (rank <- prior.length until prior.length + extraMerges) {
-      val top = pairCounts(words)
-        .orderBy(col("c").desc, col("l"), col("r"))
-        .limit(1).collect()
-      require(top.nonEmpty,
-        s"corpus ran out of symbol pairs after ${rank - prior.length} extension merges (asked for $extraMerges)")
-      val (l, r, c) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-      merges += ((rank, l, r, c))
-      if (rank < prior.length + extraMerges - 1) {
-        words = words.withColumn("syms", mergeFold(col("syms"), l, r))
-        foldsSinceCut += 1
-        if (foldsSinceCut >= FoldCheckpointEvery) {
-          words = words.localCheckpoint()
-          foldsSinceCut = 0
-        }
-      }
-    }
-    spark.createDataFrame(merges.result())
-      .toDF("rank", "left", "right", "pair_count")
+    trained(words, extraMerges, 1, MergeTrainer.candidateCap(extraMerges, 1, 0),
+      prior.length).drop("round")
   }
-
-  /** One greedy left-to-right pass applying a BATCH of symbol-disjoint
-    * merges simultaneously: the [[mergeFold]] scan with a K-way fuse
-    * branch. Well-defined exactly because the batch is symbol-disjoint
-    * (no selected pair's `l`/`r`/fused string appears in another), so no
-    * application order exists to disagree about — fusing one pair can
-    * neither create nor destroy an adjacency of another.
-    */
-  private def mergeFoldBatch(syms: org.apache.spark.sql.Column,
-      pairs: Seq[(String, String)]) =
-    aggregate(syms, array().cast("array<string>"), (acc, ch) => {
-      val last = element_at(acc, -1)
-      val fused = pairs.foldRight(lit(null).cast("string")) { case ((l, r), rest) =>
-        when(last === lit(l) && ch === lit(r), lit(l + r)).otherwise(rest)
-      }
-      when(size(acc) > 0 && fused.isNotNull,
-        concat(slice(acc, lit(1), size(acc) - 1), array(fused)))
-        .otherwise(concat(acc, array(ch)))
-    })
 
   /** Vocabulary-scale training: up to `batchSize` merges per Spark round
     * instead of one — the round-count goes from O(vocab) sequential jobs
-    * (unusable at a real 32k–64k vocabulary; the round-11 verdict's
-    * scale caveat on [[trainMerges]]) to O(vocab / batchSize).
-    *
-    * Batch selection is GREEDY FIRST-FIT over the round's ranked pair
-    * counts: rank by the [[trainMerges]] total order (count DESC,
-    * (l, r) ASC), truncate to the top `candidateCap`, then scan in rank
-    * order keeping a used-symbol set — a candidate is selected iff none
-    * of {l, r, l+r} was used by an ALREADY-SELECTED pair (the fused
-    * string participates so a selected merge can never equal, feed, or
-    * consume another's output), stopping at `batchSize`. The scan is a
-    * linear recursion, which the oracle twin mirrors exactly as a
-    * one-row-per-candidate RECURSIVE CTE carrying the used list (no
-    * set-based spelling exists: greedy acceptance depends on prior
-    * ACCEPTANCES, not mere rank). Consequences:
-    *  - the round's top-1 pair is always selected (the used set starts
-    *    empty), so `batchSize = 1` degenerates EXACTLY to
-    *    [[trainMerges]] (BpeSpec pins this on the shared corpus);
-    *  - selected pairs are pairwise symbol-disjoint, so their counts
-    *    are mutually invariant and the one-pass [[mergeFoldBatch]]
-    *    application is order-free;
+    * (unusable at a real 32k–64k vocabulary) to O(vocab / batchSize).
+    * The rounds are [[MergeTrainer]]'s, over BPE's order (count DESC,
+    * (l, r) ASC) with `l + r` as the fused symbol; the top
+    * `candidateCap` candidates (default `4 · batchSize`) enter each
+    * round's greedy first-fit. The scan is a linear recursion, which
+    * the oracle twin mirrors exactly as a one-row-per-candidate
+    * RECURSIVE CTE carrying the used list (no set-based spelling
+    * exists: greedy acceptance depends on prior ACCEPTANCES, not mere
+    * rank). Consequences:
+    *  - `batchSize = 1` IS [[trainMerges]] (BpeSpec pins it on the
+    *    shared corpus);
     *  - on corpora where merges never interact (e.g. two-symbol words),
     *    batched training ≡ sequential training outright (BpeSpec);
     *    in general the batch trades exact Sennrich sequence fidelity
     *    for O(K) fewer rounds — the standard parallel-BPE compromise,
     *    and every recorded pair_count is still the true count at its
     *    round's start.
-    *
-    * Driver state per round: the collected top-`candidateCap` count rows
-    * (bounded by config, the [[trainMerges]] 1-row argmax generalized)
-    * and the O(cap) greedy scan — microseconds next to the Spark round.
-    * The corpus-sized work stays ONE pair-count aggregation per round.
     *
     * Output: (rank, round, left, right, pair_count) — rank 0-based in
     * global selection order, `round` the Spark round that selected it.
@@ -292,44 +185,9 @@ object Bpe {
   def trainMergesBatched(docs: DataFrame, rounds: Int, batchSize: Int,
       candidateCap: Int = 0, unitTokens: Int = 1,
       byteLevel: Boolean = false, pretok: Boolean = false): DataFrame = {
-    require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    require(batchSize >= 1, s"batchSize must be >= 1, got $batchSize")
-    val cap = if (candidateCap > 0) candidateCap else 4 * batchSize
-    require(cap >= batchSize, s"candidateCap $cap < batchSize $batchSize")
-    val spark = docs.sparkSession
-    var words = wordTable(docs, unitTokens, byteLevel, pretok).localCheckpoint()
-    val merges = Seq.newBuilder[(Int, Int, String, String, Long)]
-    var rank = 0
-    for (round <- 0 until rounds) {
-      val cands = pairCounts(words)
-        .orderBy(col("c").desc, col("l"), col("r"))
-        .limit(cap).collect()
-        .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-      require(cands.nonEmpty,
-        s"corpus ran out of symbol pairs after $rank merges (round $round of $rounds)")
-      val selected = Seq.newBuilder[(String, String)]
-      val used = scala.collection.mutable.Set.empty[String]
-      var nSel = 0
-      for (i <- cands.indices if nSel < batchSize) {
-        val (l, r, c) = cands(i)
-        if (!used(l) && !used(r) && !used(l + r)) {
-          merges += ((rank, round, l, r, c))
-          selected += ((l, r))
-          used ++= Seq(l, r, l + r)
-          rank += 1
-          nSel += 1
-        }
-      }
-      // prior rounds' checkpoint blocks free via GC/ContextCleaner once
-      // unreferenced (see trainMerges); the FINAL round's fold would
-      // build a table nobody reads — skipped (the trainMerges
-      // discipline)
-      if (round < rounds - 1)
-        words = words.withColumn("syms", mergeFoldBatch(col("syms"), selected.result()))
-          .localCheckpoint()
-    }
-    spark.createDataFrame(merges.result())
-      .toDF("rank", "round", "left", "right", "pair_count")
+    val cap = MergeTrainer.candidateCap(rounds, batchSize, candidateCap)
+    trained(MergeTrainer.Words(wordTable(docs, unitTokens, byteLevel, pretok).localCheckpoint()),
+      rounds, batchSize, cap, 0)
   }
 
   /** Segment a corpus with a TRAINED merge table: apply the merges in

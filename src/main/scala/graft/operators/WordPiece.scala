@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.TextFunctions
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Distributed WordPiece vocabulary training and application (Schuster &
@@ -33,14 +33,13 @@ import org.apache.spark.sql.functions._
   * ([[TextFunctions.bertTokens]]): lowercase, punctuation chars and CJK
   * ideographs split out as their own tokens, whitespace split.
   *
-  * Distribution shape — the [[Bpe.trainMerges]] discipline verbatim:
-  * the corpus-sized work is the ONE-TIME distinct-word hash-agg; each
-  * round then pays TWO map-side-combinable aggregations over the word
-  * table (adjacent-pair counts AND unigram symbol counts — the score's
-  * denominator needs the marginals, the one extra pass WordPiece costs
-  * over BPE), a symbol-table-bounded broadcast-join between them, and a
-  * 1-row argmax collect. The per-word rewrite is a narrow HOF fold with
-  * a `localCheckpoint` lineage cut per round.
+  * Distribution shape — [[Bpe]]'s rounds, run by the same
+  * [[MergeTrainer]]: the corpus-sized work is the ONE-TIME distinct-word
+  * hash-agg; each round then pays TWO map-side-combinable aggregations
+  * over the word table (adjacent-pair counts AND unigram symbol counts —
+  * the score's denominator needs the marginals, the one extra pass
+  * WordPiece costs over BPE), a symbol-table-bounded broadcast-join
+  * between them, and a top-candidates collect.
   *
   * APPLY is NOT merge replay: WordPiece encodes by greedy
   * longest-match-first against the vocabulary SET
@@ -78,27 +77,6 @@ object WordPiece {
       .select(w, col("cnt"), syms.as("syms"))
   }
 
-  /** One greedy left-to-right fuse of (l, r) → `fused` in a symbol
-    * array — [[Bpe]]'s mergeFold with the fused string decoupled from
-    * plain concatenation (WordPiece strips r's `##`).
-    */
-  private def wpFold(syms: Column, l: String, r: String, fused: String) =
-    aggregate(syms, array().cast("array<string>"), (acc, ch) =>
-      when(size(acc) > 0 && element_at(acc, -1) === lit(l) && ch === lit(r),
-        concat(slice(acc, lit(1), size(acc) - 1), array(lit(fused))))
-        .otherwise(concat(acc, array(ch))))
-
-  /** Adjacent-pair counts — the [[Bpe]] shape. */
-  private def pairCounts(words: DataFrame): DataFrame =
-    words
-      .select(col("cnt"),
-        explode(zip_with(
-          slice(col("syms"), lit(1), size(col("syms")) - 1),
-          slice(col("syms"), lit(2), size(col("syms")) - 1),
-          (a, b) => struct(a.as("l"), b.as("r")))).as("p"))
-      .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-      .agg(sum(col("cnt")).as("c"))
-
   /** Unigram symbol counts — the score's marginals; symbol-table-sized
     * output from one map-side-combinable pass.
     */
@@ -109,6 +87,24 @@ object WordPiece {
   private def stripCont(s: String): String =
     if (s.startsWith("##")) s.substring(2) else s
 
+  /** WordPiece's candidate order: pair counts joined to both marginals,
+    * then (score_q DESC, l, r). The join is symbol-table-sized on both
+    * sides (pairs × marginals) — broadcast-or-hash per AQE, never
+    * corpus-sized; the decimal arithmetic keeps pair·10¹² and the
+    * marginal product exact at any corpus scale (int64 would wrap past
+    * ~9·10⁶ pair occurrences).
+    */
+  private def byScore(words: DataFrame): DataFrame = {
+    val uc = symCounts(words)
+    MergeTrainer.pairCounts(words)
+      .join(uc.select(col("sym").as("l"), col("sc").as("lc")), Seq("l"))
+      .join(uc.select(col("sym").as("r"), col("sc").as("rc")), Seq("r"))
+      .withColumn("score_q", expr(
+        s"CAST((CAST(c AS DECIMAL(20,0)) * CAST($ScoreScale AS DECIMAL(13,0))) " +
+          "div (CAST(lc AS DECIMAL(19,0)) * CAST(rc AS DECIMAL(19,0))) AS BIGINT)"))
+      .orderBy(col("score_q").desc, col("l"), col("r"))
+  }
+
   /** Train `numMerges` WordPiece merges. Output: one row per merge —
     * (rank, left, right, fused, pair_count, score_q), rank 0-based in
     * training order. Raises when the corpus runs out of pairs (silent
@@ -118,59 +114,15 @@ object WordPiece {
     trainAndVocab(docs, numMerges)._1
 
   /** [[trainWordPiece]] AND the frozen vocabulary from ONE corpus scan:
-    * the trainer's initial word table is checkpointed anyway, so the
-    * alphabet (the vocabulary's base layer) reads from it instead of a
-    * second full-corpus distinct-word pass — [[vocabOf]] re-runs
-    * `wordTable(docs)`, paying the corpus scan twice per train+apply
-    * chain. Returns (merge table, vocabulary in alphabet-then-rank
-    * order) — the vocabulary is byte-identical to
+    * [[trainBatchedAndVocab]] at `batchSize = 1`, one merge per round.
+    * Returns (merge table, vocabulary in alphabet-then-rank order) — the
+    * vocabulary is byte-identical to
     * `vocabOf(docs, trainWordPiece(docs, numMerges))` (spec-pinned).
     */
   def trainAndVocab(docs: DataFrame, numMerges: Int): (DataFrame, Seq[String]) = {
     require(numMerges >= 1, s"numMerges must be >= 1, got $numMerges")
-    val spark = docs.sparkSession
-    var words = wordTable(docs).localCheckpoint()
-    val alphabet = alphabetOf(words)
-    val merges = Seq.newBuilder[(Int, String, String, String, Long, Long)]
-    // checkpoint cadence + skip-final-fold — the [[Bpe.trainMerges]]
-    // discipline (guide §5): one argmax job per round; the narrow fold
-    // chains between lineage cuts instead of paying a word-table
-    // materialization every round, and the last round's fold (a table
-    // nobody reads — the vocabulary derives from alphabet + merges) is
-    // never built
-    var foldsSinceCut = 0
-    for (rank <- 0 until numMerges) {
-      // the join is symbol-table-sized on both sides (pairs × marginals)
-      // — broadcast-or-hash per AQE, never corpus-sized; the decimal
-      // arithmetic keeps pair·10¹² and the marginal product exact at any
-      // corpus scale (int64 would wrap past ~9·10⁶ pair occurrences)
-      val uc = symCounts(words)
-      val top = pairCounts(words)
-        .join(uc.select(col("sym").as("l"), col("sc").as("lc")), Seq("l"))
-        .join(uc.select(col("sym").as("r"), col("sc").as("rc")), Seq("r"))
-        .withColumn("score_q", expr(
-          s"CAST((CAST(c AS DECIMAL(20,0)) * CAST($ScoreScale AS DECIMAL(13,0))) " +
-            "div (CAST(lc AS DECIMAL(19,0)) * CAST(rc AS DECIMAL(19,0))) AS BIGINT)"))
-        .orderBy(col("score_q").desc, col("l"), col("r"))
-        .limit(1).collect()
-      require(top.nonEmpty,
-        s"corpus ran out of symbol pairs after $rank merges (asked for $numMerges)")
-      val row = top(0)
-      val (l, r) = (row.getAs[String]("l"), row.getAs[String]("r"))
-      val fused = l + stripCont(r)
-      merges += ((rank, l, r, fused, row.getAs[Long]("c"), row.getAs[Long]("score_q")))
-      if (rank < numMerges - 1) {
-        words = words.withColumn("syms", wpFold(col("syms"), l, r, fused))
-        foldsSinceCut += 1
-        if (foldsSinceCut >= Bpe.FoldCheckpointEvery) {
-          words = words.localCheckpoint()
-          foldsSinceCut = 0
-        }
-      }
-    }
-    val trained = spark.createDataFrame(merges.result())
-      .toDF("rank", "left", "right", "fused", "pair_count", "score_q")
-    (trained, (alphabet ++ merges.result().map(_._4)).distinct)
+    val (trained, vocab) = trainBatchedAndVocab(docs, numMerges, 1)
+    (trained.drop("round"), vocab)
   }
 
   /** The sorted distinct symbol set of a word table — alphabet-bounded
@@ -180,39 +132,16 @@ object WordPiece {
     words.select(explode(col("syms")).as("p")).distinct()
       .orderBy(col("p")).collect().map(_.getString(0)).toSeq
 
-  /** One greedy left-to-right pass applying a BATCH of symbol-disjoint
-    * WordPiece merges — [[Bpe]]'s mergeFoldBatch with the fused string
-    * decoupled from plain concatenation. Well-defined exactly because
-    * the batch is symbol-disjoint (no selected pair's l/r/fused appears
-    * in another), the [[trainWordPieceBatched]] selection invariant.
-    */
-  private def wpFoldBatch(syms: Column,
-      pairs: Seq[(String, String, String)]) =
-    aggregate(syms, array().cast("array<string>"), (acc, ch) => {
-      val last = element_at(acc, -1)
-      val fused = pairs.foldRight(lit(null).cast("string")) {
-        case ((l, r, f), rest) =>
-          when(last === lit(l) && ch === lit(r), lit(f)).otherwise(rest)
-      }
-      when(size(acc) > 0 && fused.isNotNull,
-        concat(slice(acc, lit(1), size(acc) - 1), array(fused)))
-        .otherwise(concat(acc, array(ch)))
-    })
-
-  /** VOCABULARY-SCALE WordPiece training — [[Bpe.trainMergesBatched]]'s
-    * discipline under the likelihood score: up to `batchSize` merges per
+  /** VOCABULARY-SCALE WordPiece training: up to `batchSize` merges per
     * Spark round (O(vocab / batchSize) rounds instead of the sequential
-    * trainer's O(vocab)). Per round: ONE pair-count aggregation + ONE
-    * marginal aggregation over the word table, candidates ranked by the
-    * quantized score (score_q DESC, (l, r) ASC) and truncated to
-    * `candidateCap`, then GREEDY FIRST-FIT with a used-symbol set over
-    * {l, r, fused} — selected pairs are pairwise symbol-disjoint, so
-    * their PAIR counts are mutually invariant and the one-pass batch
-    * fold is order-free. The recorded score_q is the score at the
-    * round's START (the marginals of later selections in a round are
-    * not refreshed by earlier ones — the standard parallel-trainer
+    * trainer's O(vocab)). The rounds are [[MergeTrainer]]'s, over the
+    * likelihood order (score_q DESC, (l, r) ASC — ONE pair-count and ONE
+    * marginal aggregation per round) with `l + stripCont(r)` as the
+    * fused symbol. The recorded score_q is the score at the round's
+    * START (the marginals of later selections in a round are not
+    * refreshed by earlier ones — the standard parallel-trainer
     * compromise, exactly [[Bpe.trainMergesBatched]]'s contract;
-    * `batchSize = 1` degenerates to [[trainWordPiece]], spec-pinned).
+    * `batchSize = 1` is [[trainWordPiece]], spec-pinned).
     *
     * Output: (rank, round, left, right, fused, pair_count, score_q).
     */
@@ -221,57 +150,24 @@ object WordPiece {
     trainBatchedAndVocab(docs, rounds, batchSize, candidateCap)._1
 
   /** [[trainWordPieceBatched]] AND the frozen vocabulary from ONE corpus
-    * scan — [[trainAndVocab]]'s vocabulary-scale sibling.
+    * scan: the trainer's initial word table is checkpointed anyway, so
+    * the alphabet (the vocabulary's base layer) reads from it instead of
+    * a second full-corpus distinct-word pass — [[vocabOf]] re-runs
+    * `wordTable(docs)`, paying the corpus scan twice per train+apply
+    * chain.
     */
   def trainBatchedAndVocab(docs: DataFrame, rounds: Int, batchSize: Int,
       candidateCap: Int = 0): (DataFrame, Seq[String]) = {
-    require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    require(batchSize >= 1, s"batchSize must be >= 1, got $batchSize")
-    val cap = if (candidateCap > 0) candidateCap else 4 * batchSize
-    require(cap >= batchSize, s"candidateCap $cap < batchSize $batchSize")
-    val spark = docs.sparkSession
-    var words = wordTable(docs).localCheckpoint()
+    val cap = MergeTrainer.candidateCap(rounds, batchSize, candidateCap)
+    val words = wordTable(docs).localCheckpoint()
     val alphabet = alphabetOf(words)
-    val merges = Seq.newBuilder[(Int, Int, String, String, String, Long, Long)]
-    var rank = 0
-    for (round <- 0 until rounds) {
-      val uc = symCounts(words)
-      val cands = pairCounts(words)
-        .join(uc.select(col("sym").as("l"), col("sc").as("lc")), Seq("l"))
-        .join(uc.select(col("sym").as("r"), col("sc").as("rc")), Seq("r"))
-        .withColumn("score_q", expr(
-          s"CAST((CAST(c AS DECIMAL(20,0)) * CAST($ScoreScale AS DECIMAL(13,0))) " +
-            "div (CAST(lc AS DECIMAL(19,0)) * CAST(rc AS DECIMAL(19,0))) AS BIGINT)"))
-        .orderBy(col("score_q").desc, col("l"), col("r"))
-        .limit(cap).collect()
-        .map(row => (row.getAs[String]("l"), row.getAs[String]("r"),
-          row.getAs[Long]("c"), row.getAs[Long]("score_q")))
-      require(cands.nonEmpty,
-        s"corpus ran out of symbol pairs after $rank merges (round $round of $rounds)")
-      val selected = Seq.newBuilder[(String, String, String)]
-      val used = scala.collection.mutable.Set.empty[String]
-      var nSel = 0
-      for (i <- cands.indices if nSel < batchSize) {
-        val (l, r, c, sq) = cands(i)
-        val fused = l + stripCont(r)
-        if (!used(l) && !used(r) && !used(fused)) {
-          merges += ((rank, round, l, r, fused, c, sq))
-          selected += ((l, r, fused))
-          used ++= Seq(l, r, fused)
-          rank += 1
-          nSel += 1
-        }
-      }
-      // prior rounds' checkpoint blocks free via GC/ContextCleaner once
-      // unreferenced (the Bpe house pattern); the final round's fold
-      // would build a table nobody reads — skipped
-      if (round < rounds - 1)
-        words = words.withColumn("syms", wpFoldBatch(col("syms"), selected.result()))
-          .localCheckpoint()
-    }
-    val trained = spark.createDataFrame(merges.result())
+    val merges = MergeTrainer.train(MergeTrainer.Words(words), rounds,
+      batchSize, cap, 0, byScore, (l, r) => l + stripCont(r))
+    val trained = docs.sparkSession.createDataFrame(merges.map(m =>
+        (m.rank, m.round, m.left, m.right, m.fused,
+          m.counts.getAs[Long]("c"), m.counts.getAs[Long]("score_q"))))
       .toDF("rank", "round", "left", "right", "fused", "pair_count", "score_q")
-    (trained, (alphabet ++ merges.result().map(_._5)).distinct)
+    (trained, (alphabet ++ merges.map(_.fused)).distinct)
   }
 
   /** The trained VOCABULARY as driver state: the training alphabet

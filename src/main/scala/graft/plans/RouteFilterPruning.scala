@@ -2,7 +2,7 @@ package graft.plans
 
 import graft.functions.{JsonPathExists, JsonPathRoutes}
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, CaseWhen, CreateMap, ElementAt, EqualTo, Explode, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, CaseWhen, CreateMap, ElementAt, EqualTo, Explode, Expression, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Generate, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{BooleanType, IntegerType, StringType}
@@ -21,9 +21,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * `route`). Sentinel routes (< 0) are left untouched — their semantics
   * involve decode state, not one rule.
   *
-  * This is the engine's `Rule[LogicalPlan]` + `SparkSessionExtensions`
-  * face (build brief preference (c)); enable with
-  * `.withExtensions(new graft.plans.GraftExtensions)`.
+  * Every session `graft.GraftSession.local` builds runs it, through
+  * [[GraftExtensions]].
   */
 object RouteFilterPruning extends Rule[LogicalPlan] {
 
@@ -32,8 +31,7 @@ object RouteFilterPruning extends Rule[LogicalPlan] {
       rewrite(cond, g).getOrElse(f)
   }
 
-  private def rewrite(cond: org.apache.spark.sql.catalyst.expressions.Expression,
-      g: Generate): Option[LogicalPlan] = {
+  private def rewrite(cond: Expression, g: Generate): Option[LogicalPlan] = {
     // only the non-outer join=either shapes: an outer Generate would keep a
     // null-route row for an empty array (routes is never empty, but stay
     // semantics-preserving by construction)
@@ -42,12 +40,8 @@ object RouteFilterPruning extends Rule[LogicalPlan] {
       case Seq(a) => Some(a)
       case _ => None
     }
-    (cond, g.generator) match {
+    (literalRight(cond), g.generator) match {
       case (EqualTo(a: Attribute, Literal(i: Int, IntegerType)),
-            Explode(jr: JsonPathRoutes))
-          if routeAttr.exists(_.exprId == a.exprId) && i >= 0 && i < jr.paths.length =>
-        Some(pruned(g, jr, i))
-      case (EqualTo(Literal(i: Int, IntegerType), a: Attribute),
             Explode(jr: JsonPathRoutes))
           if routeAttr.exists(_.exprId == a.exprId) && i >= 0 && i < jr.paths.length =>
         Some(pruned(g, jr, i))
@@ -72,7 +66,7 @@ object RouteFilterPruning extends Rule[LogicalPlan] {
         }
         // the i→topic map is authored as CreateMap of literals, which
         // ConstantFolding usually collapses into one map Literal — accept both
-        def mapPairs(e: org.apache.spark.sql.catalyst.expressions.Expression): Option[Seq[(Int, UTF8String)]] =
+        def mapPairs(e: Expression): Option[Seq[(Int, UTF8String)]] =
           e match {
             case CreateMap(entries, _) =>
               val ps = entries.grouped(2).collect {
@@ -85,12 +79,9 @@ object RouteFilterPruning extends Rule[LogicalPlan] {
                 (m.keyArray().getInt(k), m.valueArray().getUTF8String(k))))
             case _ => None
           }
-        val target = elseV match {
+        val target = literalRight(elseV) match {
           case EqualTo(ElementAt(mapExpr, a: Attribute, _, failOnError),
               Literal(t: UTF8String, _: StringType)) if a.exprId == ra.exprId =>
-            mapPairs(mapExpr).map((_, t, failOnError))
-          case EqualTo(Literal(t: UTF8String, _: StringType),
-              ElementAt(mapExpr, a: Attribute, _, failOnError)) if a.exprId == ra.exprId =>
             mapPairs(mapExpr).map((_, t, failOnError))
           case _ => None
         }
@@ -120,6 +111,15 @@ object RouteFilterPruning extends Rule[LogicalPlan] {
         }
       case _ => None
     }
+  }
+
+  /** `lit = e` as `e = lit`, so each filter shape needs one match arm:
+    * Catalyst keeps a literal on whichever side the user wrote it, and
+    * pushes `lit = CASE …` into the branches as `lit = element_at(…)`.
+    */
+  private def literalRight(e: Expression): Expression = e match {
+    case EqualTo(l: Literal, r) => EqualTo(r, l)
+    case other => other
   }
 
   private def pruned(g: Generate, jr: JsonPathRoutes, i: Int): LogicalPlan = {

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.operators.ProtoTx
 import graft.rules.TxDispatchRules
 import org.apache.spark.sql.DataFrame
 
@@ -65,7 +66,7 @@ object DispatchApp {
     */
   def routedStream(source: DataFrame, cfg: AppConfig): DataFrame =
     DispatchStream.withMetrics(
-      DispatchStream.route(source, cfg.rules, cfg.dlqTopic, cfg.errorTopic))
+      ProtoTx.routed(source, cfg.rules, cfg.dlqTopic, cfg.errorTopic))
 
   def main(args: Array[String]): Unit = {
     require(args.length == 1, "usage: DispatchApp <app.properties>")

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.operators.ProtoTx
 import graft.rules.TxDispatchRules
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -12,7 +11,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * out, stateless.
   *
   * The SAME `DataFrame → DataFrame` core ([[graft.operators.TxDispatchPipeline]] /
-  * [[ProtoTx]]) serves batch (verify/bench harness) and streaming — the
+  * [[graft.operators.ProtoTx]]) serves batch (verify/bench harness) and streaming — the
   * plan is stateless (project + generate + filter, no watermark, no state
   * store, no shuffle), so Spark runs it continuously with per-partition
   * input order preserved, matching the reference's ordering guarantee
@@ -33,17 +32,6 @@ object DispatchStream {
       .option("subscribe", topicIn)
       .option("startingOffsets", "earliest")
       .load()
-
-  /** Route a stream of raw protobuf transactions. Input contract: columns
-    * `key` (passthrough) and `raw: Binary`. Kafka's `value` column maps to
-    * `raw` via [[fromKafka]].
-    */
-  def route(
-      stream: DataFrame,
-      rules: TxDispatchRules,
-      dlqTopic: String = "dlq",
-      errorTopic: Option[String] = Some("error")): DataFrame =
-    ProtoTx.routed(stream, rules, dlqTopic, errorTopic)
 
   /** Kafka records → pipeline input contract (key passthrough, value =
     * raw tx bytes — reference: Consumed.with(String, ByteArray),
@@ -88,7 +76,8 @@ object DispatchStream {
 
   /** foreachBatch escape hatch: per-destination writers with separate
     * sink configs (needed when per-topic serde/config must differ —
-    * SURVEY.md §2.7). The batch is cached once, filtered per destination.
+    * SURVEY.md §2.7). Each batch reaches `writer` uncached: a writer
+    * that filters it once per destination should persist it first.
     */
   def toForeachBatch(
       routed: DataFrame,

@@ -506,6 +506,31 @@ class BpeSpec extends AnyFunSuite {
     assert(dry.getMessage.contains("extension"))
   }
 
+  /** A corpus deep enough for 40+ merges: random words over eight
+    * letters, so the trainers cross the lineage cuts after 16 and 32
+    * folded merges.
+    */
+  lazy val deepTexts: Seq[String] = {
+    val rnd = new scala.util.Random(11)
+    Seq.fill(12)(Seq.fill(30)(
+      Seq.fill(3 + rnd.nextInt(7))("abcdefgh"(rnd.nextInt(8))).mkString).mkString(" "))
+  }
+  lazy val deepDocs = deepTexts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+    .toDF("doc_id", "text")
+  lazy val deepTrained = Bpe.trainMerges(deepDocs, 44)
+    .as[(Int, String, String, Long)].collect().toSeq.sortBy(_._1)
+
+  test("trainMerges past two lineage cuts (44 merges) matches the local reference") {
+    assert(deepTrained == referenceTrain(deepTexts, 44))
+  }
+
+  test("extendMerges: a trained 20-merge prior (folded across a cut) extends to the longer run's tail") {
+    val prior = deepTrained.take(20).map(m => (m._2, m._3))
+    val ext = Bpe.extendMerges(deepDocs, prior, 24)
+      .as[(Int, String, String, Long)].collect().toSeq.sortBy(_._1)
+    assert(ext == deepTrained.drop(20))
+  }
+
   test("extendMerges: a prior DEEPER than the measured 64-fold analysis cliff applies and extends") {
     // FOLDDEPTH_r13.json: >= 64 chained mergeFold HOFs fail analysis
     // (Max iterations reached) under stock Spark — exactly the shape an

@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.ProtoTx
 import graft.proto.CosmosTx
 import graft.proto.CosmosTx._
 import graft.rules.{DispatchRule, TxDispatchRules}
@@ -39,7 +40,7 @@ class DispatchStreamSpec extends AnyFunSuite {
 
     val input = MemoryStream[(String, Array[Byte])]
     val routed = DispatchStream.withMetrics(
-      DispatchStream.route(
+      ProtoTx.routed(
         input.toDF().toDF("key", "raw"), rules))
 
     @volatile var observed: Map[String, Long] = Map.empty
@@ -93,7 +94,7 @@ class DispatchStreamSpec extends AnyFunSuite {
     implicit val sqlCtx = s.sqlContext
 
     val input = MemoryStream[(String, Array[Byte])]
-    val routed = DispatchStream.route(input.toDF().toDF("key", "raw"), rules)
+    val routed = ProtoTx.routed(input.toDF().toDF("key", "raw"), rules)
 
     val seen = scala.collection.concurrent.TrieMap.empty[String, Long]
     val dir = java.nio.file.Files.createTempDirectory("ckpt").toString
@@ -118,7 +119,7 @@ class DispatchStreamSpec extends AnyFunSuite {
     import s.implicits._
     implicit val sqlCtx = s.sqlContext
     val input = MemoryStream[(String, Array[Byte])]
-    val routed = DispatchStream.route(input.toDF().toDF("key", "raw"), rules)
+    val routed = ProtoTx.routed(input.toDF().toDF("key", "raw"), rules)
     val q = routed.writeStream.format("memory").queryName("plan_probe").start()
     input.addData(("k", msgSendTx("a", "b")))
     q.processAllAvailable()

@@ -53,6 +53,25 @@ class RouteFilterPruningSpec extends AnyFunSuite {
     assert(viaRule == expected && viaRule.nonEmpty)
   }
 
+  test("literal-on-the-left filters (lit(0) === route, lit(topic) === topic) prune the same way") {
+    import spark.implicits._
+    def noGenerate(q: org.apache.spark.sql.DataFrame): Unit = {
+      val optimized = q.queryExecution.optimizedPlan
+      assert(!optimized.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Generate]),
+        s"Generate survived:\n$optimized")
+      assert(optimized.toString.contains("json_path_exists"))
+    }
+    val byRoute = routes.filter(lit(0) === col("route")).select($"event_id")
+    noGenerate(byRoute)
+    val byTopic = routedFull.filter(lit("topic-1") === col("topic")).select($"event_id")
+    noGenerate(byTopic)
+    val expected = routes.select($"event_id", $"route").as[(Long, Int)]
+      .collect().filter(_._2 == 0).map(_._1).sorted.toSeq
+    assert(expected.nonEmpty)
+    assert(byRoute.as[Long].collect().sorted.toSeq == expected)
+    assert(byTopic.as[Long].collect().sorted.toSeq == expected)
+  }
+
   test("topic filters that cannot name one rule are left untouched") {
     // sentinel topic: 'dlq' rows need decode state, not one rule
     val dlq = routedFull.filter(col("topic") === "dlq")
