@@ -3,12 +3,14 @@ package graft.functions
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult.DataTypeMismatch
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.GraftColumnBridge.{toColumn, toExpression}
-import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, IntegerType}
+import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, IntegerType, StringType}
 
 import scala.util.Try
 import scala.util.control.NonFatal
@@ -18,6 +20,17 @@ import scala.util.control.NonFatal
   * exception — reference: runCatching at TopologyProducer.kt:90–93).
   */
 private[functions] object JsonDocs {
+  /** The JsonPath expressions' document: canonical JSON text, or the
+    * struct `decode_tx` returns, whose tree the rules read directly.
+    */
+  def checkDocType(doc: Expression): TypeCheckResult =
+    if (doc.dataType == StringType || doc.dataType == DecodeCosmosTx.schema) TypeCheckResult.TypeCheckSuccess
+    else DataTypeMismatch("UNEXPECTED_INPUT_TYPE", Map(
+      "paramIndex" -> "first",
+      "requiredType" -> s"""("STRING" or "${DecodeCosmosTx.schema.sql}")""",
+      "inputSql" -> s""""${doc.sql}"""",
+      "inputType" -> s""""${doc.dataType.sql}""""))
+
   @transient lazy val mapper = new ObjectMapper()
   def parse(s: String): JsonNode =
     try {
@@ -35,6 +48,10 @@ private[functions] object JsonDocs {
         val n = mapper.readTree(s.getBytes)
         if (n == null || n.isMissingNode) null else n
       } catch { case NonFatal(_) => null }
+    case d: DecodedTxRow => d.tree
+    // any other decode_tx struct: an error row, or a copy (an UnsafeRow
+    // after an interpreted projection) — its txJson is the document
+    case r: InternalRow => if (r.isNullAt(0)) null else parseAny(r.getUTF8String(0))
     case other if other != null => parse(other.toString)
     case _ => null
   }
@@ -42,7 +59,9 @@ private[functions] object JsonDocs {
 
 /** `json_path_exists(json, path)` — true iff `path` (Jayway-subset JsonPath,
   * [[JsonPathLite]]) selects ≥1 node of `json`; false on any evaluation
-  * error; null only when `json` is null.
+  * error; null only when `json` is null. `json` is a JSON string or a
+  * `decode_tx` struct (whose tree is read; an undecodable record's struct
+  * matches nothing); any other type fails analysis.
   *
   * This is the semantic predicate of the reference's rule engine
   * (reference: TopologyProducer.kt:216–218 — Jayway parse + read +
@@ -59,6 +78,7 @@ case class JsonPathExists(child: Expression, path: String)
   override def dataType: DataType = BooleanType
   override def nullable: Boolean = child.nullable
   override def prettyName: String = "json_path_exists"
+  override def checkInputDataTypes(): TypeCheckResult = JsonDocs.checkDocType(child)
 
   @transient private lazy val compiled: Option[JsonPathLite.Compiled] =
     Try(JsonPathLite.compile(path)).toOption
@@ -94,7 +114,9 @@ case class JsonPathExists(child: Expression, path: String)
 /** `json_path_routes(json, paths)` — evaluate EVERY rule predicate against
   * one parse of the document and return the array of matching rule indices
   * (possibly empty), in declaration order. Null when the document is null or
-  * unparseable (the decode-error disposition).
+  * unparseable (the decode-error disposition). The document is a JSON
+  * string, or a `decode_tx` struct: a decoded tx is then routed on the tree
+  * built from it, with no JSON rendered or parsed.
   *
   * This collapses the reference's per-transaction rule loop
   * (TopologyProducer.kt:214–224: forEachIndexed { evaluate; catch-per-rule })
@@ -119,6 +141,7 @@ case class JsonPathRoutes(
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def nullable: Boolean = errorRoute.isEmpty
   override def prettyName: String = "json_path_routes"
+  override def checkInputDataTypes(): TypeCheckResult = JsonDocs.checkDocType(child)
 
   @transient private lazy val rules = new JsonPathLite.RuleSet(paths)
   @transient private lazy val errorResult =

@@ -1,5 +1,6 @@
 package graft.functions
 
+import com.fasterxml.jackson.databind.node.ObjectNode
 import graft.proto.CosmosTx
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnBridge.{toColumn, toExpression}
@@ -27,18 +28,17 @@ import scala.util.control.NonFatal
   *  - msgCount: Int      — `tx.body.messages.count()` (the reference logs
   *                         this per routed record, TopologyProducer.kt:153)
   *
-  * Decode and render run eagerly, inside one `try`, so a record gets
-  * exactly one of `error` and `txJson`. `reencoded`, `msgTypeUrls` and
-  * `msgCount` are computed from the decoded `Tx` when first read
-  * ([[DecodedTxRow]]): they cannot fail once decode has succeeded, and
-  * most plans read them for few records or none. Predicate pushdown copies
-  * the whole `decode_tx(raw)` into a single-topic consumer's `Filter`,
-  * which reads only `txJson`, so it never re-encodes. The `Project` above
-  * it runs its own `decode_tx(raw)` for each record the filter keeps: it
-  * decodes and renders that record a second time, then reads only
-  * `reencoded` and drops the JSON (see the open `FOUND:` line on two
-  * decode sites in CHANGES.md). Column pruning leaves `msgTypeUrls`
-  * unread in `ProtoTx.routed`.
+  * Only the decode runs eagerly, inside the `try`: a record gets exactly
+  * one of `error` and a [[DecodedTxRow]], whose every other field is
+  * computed from the decoded `Tx` when first read and cannot fail. The
+  * JsonPath expressions take this struct as their document and evaluate
+  * its tree ([[DecodedTxRow.tree]]), so routing renders no JSON; `txJson`
+  * is rendered only where a plan reads it (the DLQ envelope, or a caller
+  * selecting it). Predicate pushdown copies the whole `decode_tx(raw)`
+  * into a single-topic consumer's `Filter`, which builds the tree only;
+  * the `Project` above it runs its own `decode_tx(raw)` for each record
+  * the filter keeps and reads only `reencoded`, so those records are
+  * decoded twice but rendered never.
   */
 case class DecodeCosmosTx(child: Expression) extends UnaryExpression {
 
@@ -58,10 +58,8 @@ case class DecodeCosmosTx(child: Expression) extends UnaryExpression {
 
   /** Row-level decode, also the codegen target. */
   def decode(bytes: Array[Byte]): InternalRow =
-    try {
-      val tx = CosmosTx.decode(bytes)
-      new DecodedTxRow(tx, UTF8String.fromString(CosmosTx.toJson(tx)))
-    } catch {
+    try new DecodedTxRow(CosmosTx.decode(bytes))
+    catch {
       case NonFatal(e) =>
         InternalRow(null, null,
           UTF8String.fromString(s"${e.getClass.getSimpleName}: ${e.getMessage}"),
@@ -81,22 +79,34 @@ object DecodeCosmosTx {
     StructField("msgCount", IntegerType)))
 }
 
-/** A successful [[DecodeCosmosTx]] result: `txJson` rendered at decode,
-  * `reencoded` and `msgTypeUrls` built from `tx` on first read and kept,
-  * `msgCount` read off `tx`. `isNullAt` forces nothing (only `error` is
-  * null), and `copy()` materialises every field into a
-  * `GenericInternalRow`. Read-only, like any expression result.
+/** A successful [[DecodeCosmosTx]] result. The canonical document's
+  * [[tree]], `txJson`, `reencoded` and `msgTypeUrls` are each built from
+  * `tx` on first read and kept; `msgCount` is read off `tx`. `isNullAt`
+  * forces nothing (only `error` is null), and `copy()` materialises every
+  * field except the tree into a `GenericInternalRow`. Read-only, like any
+  * expression result.
   */
-final class DecodedTxRow(tx: CosmosTx.Tx, txJson: UTF8String)
-    extends InternalRow with BaseGenericInternalRow {
+final class DecodedTxRow(tx: CosmosTx.Tx) extends InternalRow with BaseGenericInternalRow {
+  private var doc: ObjectNode = _
+  private var txJson: UTF8String = _
   private var reencoded: Array[Byte] = _
   private var msgTypeUrls: ArrayData = _
+
+  /** The canonical document as the JsonPath rules read it:
+    * `CosmosTx.toTree(tx)`, equal to the parse of `txJson`.
+    */
+  def tree: ObjectNode = {
+    if (doc == null) doc = CosmosTx.toTree(tx)
+    doc
+  }
 
   override def numFields: Int = 5
   override def isNullAt(ordinal: Int): Boolean = ordinal == 2
 
   override protected def genericGet(ordinal: Int): Any = ordinal match {
-    case 0 => txJson
+    case 0 =>
+      if (txJson == null) txJson = UTF8String.fromString(CosmosTx.toJson(tx))
+      txJson
     case 1 =>
       if (reencoded == null) reencoded = CosmosTx.encode(tx)
       reencoded

@@ -1,7 +1,6 @@
 package graft.operators
 
-import graft.functions.JsonPathFunctions.json_path_routes
-import graft.rules.{TxDispatchRules}
+import graft.rules.TxDispatchRules
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.GraftColumnBridge.{toColumn, toExpression}
 import org.apache.spark.sql.catalyst.expressions.Base64
@@ -12,7 +11,9 @@ import org.apache.spark.sql.functions._
   *
   * Input contract: a DataFrame with
   *   - `txJson: String`  — the transaction's canonical JSON document (null
-  *                         or unparseable ⇒ decode failure);
+  *                         or unparseable ⇒ decode failure); or, for
+  *                         protobuf input, a `decode_tx` struct column
+  *                         passed as `decoded` instead (see [[ProtoTx]]);
   *   - `raw: Binary`     — the original input bytes (error-topic payload,
   *                         reference: TopologyProducer.kt:122);
   *   - any passthrough columns (key, ids, …) — untouched, like the
@@ -45,18 +46,23 @@ object TxDispatchPipeline {
     * @param errorTopic  destination for undecodable inputs; None ⇒ errored
     *                    rows are dropped (reference: branch without `to()`
     *                    when `topic.error` is unset, TopologyProducer.kt:123–131)
-    * @param reEncoded   optional column producing the rule-topic payload
-    *                    (re-encoded tx bytes, reference X3); defaults to the
-    *                    UTF-8 bytes of `txJson` for JSON-native inputs
+    * @param decoded     the `decode_tx` struct column of protobuf input: the
+    *                    rules read its tree, rule topics and the DLQ
+    *                    envelope carry its re-encoded tx bytes (reference
+    *                    X3), and only the envelope reads its `txJson`.
+    *                    None for JSON-native input: the rules read `txJson`
+    *                    and rule topics carry its UTF-8 bytes
     */
   def apply(
       df: DataFrame,
       rules: TxDispatchRules,
       dlqTopic: String = "dlq",
       errorTopic: Option[String] = Some("error"),
-      reEncoded: Option[Column] = None): DataFrame = {
+      decoded: Option[Column] = None): DataFrame = {
 
-    val routed = withRoutes(df, rules)
+    val routed = withRoutes(df, rules, decoded.getOrElse(col("txJson")))
+    val txJson = decoded.fold(col("txJson"))(_.getField("txJson"))
+    val reEncoded = decoded.map(_.getField("reencoded"))
 
     val topicFor: Column = {
       // rule-index → topic lookup as a literal map: plan-shape-from-config,
@@ -69,7 +75,7 @@ object TxDispatchPipeline {
         .otherwise(ruleTopic)
     }
 
-    val ruleValue = reEncoded.getOrElse(encode(col("txJson"), "UTF-8"))
+    val ruleValue = reEncoded.getOrElse(encode(txJson, "UTF-8"))
 
     // DLQ envelope txBytes: the reference serializes the DECODED canonical
     // transaction (DLQ(txBytes = tx.toByteArray()), TopologyProducer.kt:186–195),
@@ -79,7 +85,7 @@ object TxDispatchPipeline {
 
     val valueFor: Column =
       when(col("route") === ERROR, col("raw"))
-        .when(col("route") === UNFILTERED, encode(dlqEnvelope(col("txJson"), dlqBytes), "UTF-8"))
+        .when(col("route") === UNFILTERED, encode(dlqEnvelope(txJson, dlqBytes), "UTF-8"))
         .otherwise(ruleValue)
 
     // Unset error topic ⇒ topic stays NULL on error rows; the SINKS drop
@@ -106,14 +112,16 @@ object TxDispatchPipeline {
 
   /** Just the route derivation + multicast explode (reference P3+P4):
     * adds `route: Int`, duplicating each row once per matching rule.
+    * `document` is what the rules read: the `txJson` string, or a
+    * `decode_tx` struct, which is routed on its tree.
     */
-  def withRoutes(df: DataFrame, rules: TxDispatchRules): DataFrame = {
+  def withRoutes(df: DataFrame, rules: TxDispatchRules, document: Column = col("txJson")): DataFrame = {
     // Sentinels are folded INTO the expression (undecodable ⇒ [ERROR], no
     // match ⇒ [UNFILTERED]) so the per-row JSON parse + rule evaluation
     // happens exactly once — a CASE around the expression would be
     // re-evaluated per textual occurrence by the interpreted Generate.
     val routes = graft.functions.JsonPathFunctions.json_path_routes_dispositioned(
-      col("txJson"), rules.rules.map(_.predicate), ERROR, UNFILTERED)
+      document, rules.rules.map(_.predicate), ERROR, UNFILTERED)
     df.withColumn("route", explode(routes))
   }
 

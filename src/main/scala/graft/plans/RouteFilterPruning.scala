@@ -124,8 +124,9 @@ object RouteFilterPruning extends Rule[LogicalPlan] {
 
   private def pruned(g: Generate, jr: JsonPathRoutes, i: Int): LogicalPlan = {
     val route = g.generatorOutput.head
-    // under ProtoTx.routed, pushdown later copies decode_tx(raw) into this
-    // Filter; it reads only txJson, which decode_tx renders eagerly
+    // under ProtoTx.routed, jr.child is the decode_tx struct and pushdown
+    // later copies decode_tx(raw) into this Filter: it decodes and reads
+    // the tree, and never renders or parses JSON
     val filtered = Filter(JsonPathExists(jr.child, jr.paths(i)), g.child)
     // Reproduce Generate's EXACT output (requiredChildOutput ++ generator
     // output — child columns may have been pruned via unrequiredChildIndex),

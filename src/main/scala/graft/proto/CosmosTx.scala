@@ -1,5 +1,7 @@
 package graft.proto
 
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.{ArrayNode, JsonNodeFactory, ObjectNode}
 import graft.proto.ProtoWire.{ProtoParseException, Reader, Writer}
 
 import java.lang.{StringBuilder => JStringBuilder}
@@ -284,29 +286,90 @@ object CosmosTx {
     defaultRegistry ++ loaded
   }
 
-  /** The built-in printers: each renders its payload's fields into a
-    * buffer of its own with the renderer's helpers below, and returns the
+  /** A built-in payload type: renders its payload's fields straight into
+    * the JSON text or into the tree, with no fragment in between. Each
+    * method parses the payload before it writes anything, so one that
+    * throws leaves nothing behind. As a [[PayloadPrinter]] it returns the
     * comma-prefixed fragment like any [[PayloadTypePrinters]] printer.
     */
-  val defaultRegistry: Map[String, PayloadPrinter] = Map(
-    "/cosmos.bank.v1beta1.MsgSend" -> { bytes =>
-      val m = parseMsgSend(bytes)
+  private abstract class Builtin extends PayloadPrinter {
+    def text(sb: JStringBuilder, bytes: Array[Byte]): Unit
+    def tree(o: ObjectNode, bytes: Array[Byte]): Unit
+    final def apply(bytes: Array[Byte]): String = {
       val sb = new JStringBuilder
+      text(sb, bytes)
+      sb.toString
+    }
+  }
+
+  private object MsgSendPayload extends Builtin {
+    def text(sb: JStringBuilder, bytes: Array[Byte]): Unit = {
+      val m = parseMsgSend(bytes)
       if (m.fromAddress.nonEmpty) str(sb.append(",\"fromAddress\":"), m.fromAddress)
       if (m.toAddress.nonEmpty) str(sb.append(",\"toAddress\":"), m.toAddress)
       if (m.amount.nonEmpty) coins(sb.append(",\"amount\":"), m.amount)
-      sb.toString
-    },
-    "/cosmos.crypto.secp256k1.PubKey" -> { bytes =>
-      // PubKey { 1: key(bytes) }
+    }
+    def tree(o: ObjectNode, bytes: Array[Byte]): Unit = {
+      val m = parseMsgSend(bytes)
+      if (m.fromAddress.nonEmpty) o.put("fromAddress", m.fromAddress)
+      if (m.toAddress.nonEmpty) o.put("toAddress", m.toAddress)
+      if (m.amount.nonEmpty) coinsTree(o.putArray("amount"), m.amount)
+    }
+  }
+
+  /** `PubKey { 1: key(bytes) }`. */
+  private object PubKeyPayload extends Builtin {
+    private def key(bytes: Array[Byte]): Array[Byte] = {
       val r = new Reader(bytes)
       var key: Array[Byte] = Array.emptyByteArray
       while (r.hasMore) r.readTag() match {
         case (1, 2) => key = r.readBytes()
         case (_, wt) => r.skip(wt)
       }
-      if (key.isEmpty) "" else base64(new JStringBuilder(",\"key\":"), key).toString
-    })
+      key
+    }
+    def text(sb: JStringBuilder, bytes: Array[Byte]): Unit = {
+      val k = key(bytes)
+      if (k.nonEmpty) base64(sb.append(",\"key\":"), k)
+    }
+    def tree(o: ObjectNode, bytes: Array[Byte]): Unit = {
+      val k = key(bytes)
+      if (k.nonEmpty) o.put("key", Base64.getEncoder.encodeToString(k))
+    }
+  }
+
+  /** The built-in printers. */
+  val defaultRegistry: Map[String, PayloadPrinter] = Map(
+    "/cosmos.bank.v1beta1.MsgSend" -> MsgSendPayload,
+    "/cosmos.crypto.secp256k1.PubKey" -> PubKeyPayload)
+
+  /** The printer registered for an `Any`'s type: keyed by the typeUrl from
+    * its first '/' ("type.googleapis.com/x.Y" → "/x.Y").
+    */
+  private def printerFor(a: AnyMsg, registry: Map[String, PayloadPrinter]): Option[PayloadPrinter] = {
+    val slash = a.typeUrl.indexOf('/')
+    registry.get(if (slash < 0) "" else a.typeUrl.substring(slash))
+  }
+
+  private val Nodes = JsonNodeFactory.instance
+  private lazy val fragmentMapper = new ObjectMapper()
+
+  /** The `Any` object a non-built-in printer's output completes,
+    * `{"@type":<typeUrl><fragment>}` parsed, or null when the printer
+    * throws or that text is not exactly one JSON object. The renderers
+    * print such a payload as base64 (payload isolation), so a printer's
+    * bad fragment can never make the canonical JSON invalid.
+    */
+  private def printedObject(a: AnyMsg, printer: PayloadPrinter): (String, ObjectNode) =
+    try {
+      val fragment = printer(a.value)
+      val p = fragmentMapper.createParser(
+        str(new JStringBuilder("{\"@type\":"), a.typeUrl).append(fragment).append('}').toString)
+      try {
+        val o = fragmentMapper.readTree[JsonNode](p)
+        if (o != null && o.isObject && p.nextToken() == null) (fragment, o.asInstanceOf[ObjectNode]) else null
+      } finally p.close()
+    } catch { case NonFatal(_) => null }
 
   private val Hex = "0123456789abcdef"
 
@@ -363,21 +426,44 @@ object CosmosTx {
     sb.append(']')
   }
 
+  private def coinsTree(arr: ArrayNode, cs: Seq[Coin]): Unit =
+    cs.foreach { c =>
+      val o = arr.addObject()
+      if (c.denom.nonEmpty) o.put("denom", c.denom)
+      if (c.amount.nonEmpty) o.put("amount", c.amount)
+    }
+
   private def any(sb: JStringBuilder, a: AnyMsg, registry: Map[String, PayloadPrinter]): JStringBuilder = {
     str(sb.append("{\"@type\":"), a.typeUrl)
-    val slash = a.typeUrl.indexOf('/') // "type.googleapis.com/x.Y" → "/x.Y"
-    // Unregistered payloads — and registered ones whose bytes don't parse —
-    // render open-schema as {@type, value:base64}: a malformed PAYLOAD must
-    // not turn a decodable ENVELOPE into a decode error (payload isolation,
-    // same spirit as per-rule isolation). The reference's classpath scan
-    // makes every compiled type printable; this is the offline equivalent.
-    val printed = registry.get(if (slash < 0) "" else a.typeUrl.substring(slash)) match {
+    // Unregistered payloads — and registered ones whose bytes don't parse
+    // or whose printer fails — render open-schema as {@type, value:base64}:
+    // a malformed PAYLOAD must not turn a decodable ENVELOPE into a decode
+    // error (payload isolation, same spirit as per-rule isolation). The
+    // reference's classpath scan makes every compiled type printable; this
+    // is the offline equivalent.
+    val printed = printerFor(a, registry) match {
+      case Some(b: Builtin) =>
+        try { b.text(sb, a.value); true } catch { case NonFatal(_) => false }
       case Some(printer) =>
-        try { sb.append(printer(a.value)); true } catch { case NonFatal(_) => false }
+        val p = printedObject(a, printer)
+        if (p != null) sb.append(p._1)
+        p != null
       case None => false
     }
     if (!printed && a.value.nonEmpty) base64(sb.append(",\"value\":"), a.value)
     sb.append('}')
+  }
+
+  private def anyTree(a: AnyMsg, registry: Map[String, PayloadPrinter]): ObjectNode = {
+    def open(o: ObjectNode): ObjectNode =
+      if (a.value.isEmpty) o else o.put("value", Base64.getEncoder.encodeToString(a.value))
+    val o = Nodes.objectNode().put("@type", a.typeUrl)
+    printerFor(a, registry) match {
+      case Some(b: Builtin) =>
+        try { b.tree(o, a.value); o } catch { case NonFatal(_) => open(o) }
+      case Some(printer) => Option(printedObject(a, printer)).fold(open(o))(_._2)
+      case None => open(o)
+    }
   }
 
   /** Canonical proto-JSON of a decoded Tx (reference: JsonFormat.printer()
@@ -390,12 +476,15 @@ object CosmosTx {
     * One pass into one `java.lang.StringBuilder`: every object, array and
     * string is appended in place (strings copy each unescaped run in bulk),
     * a field's comma is decided by whether anything was appended since its
-    * object opened. A payload printer's fragment is appended once it has
-    * returned, so a printer that throws leaves nothing behind and its
-    * payload is rendered as base64. The cost is one buffer (grown a
+    * object opened. A built-in payload is appended in place; an SPI
+    * printer's fragment is appended only once it has returned and parsed
+    * as the rest of its `Any` object, so a printer that throws or returns
+    * malformed JSON leaves nothing behind and its payload is rendered as
+    * base64. The cost is one buffer (grown a
     * few times for a large tx), the final `String`, one base64 `String`
-    * per bytes field and one fragment `String` per printed payload: no
-    * other per-field strings, no per-object collections.
+    * per bytes field, and for a payload of an SPI printer its fragment and
+    * the parse that checks it: no other per-field strings, no per-object
+    * collections.
     */
   def toJson(tx: Tx, registry: Map[String, PayloadPrinter] = CosmosTx.registry): String = {
     val sb = new JStringBuilder(256)
@@ -435,5 +524,46 @@ object CosmosTx {
       sb.append(']')
     }
     sb.append('}').toString
+  }
+
+  /** [[toJson]]'s document as a Jackson tree, built straight from the `Tx`:
+    * equal to `readTree(toJson(tx))` field for field, in the same order,
+    * with the same `@type`, base64 and unsigned-uint64 rules. This is what
+    * the rules evaluate, so a decoded tx is routed without rendering its
+    * JSON and parsing it back. Built-in payload types add their nodes
+    * directly; an SPI printer's fragment is the one part built by parsing.
+    */
+  def toTree(tx: Tx, registry: Map[String, PayloadPrinter] = CosmosTx.registry): ObjectNode = {
+    val root = Nodes.objectNode()
+    val body = tx.body
+    val bodyObj = root.putObject("body")
+    if (body.messages.nonEmpty) {
+      val arr = bodyObj.putArray("messages")
+      body.messages.foreach(m => arr.add(anyTree(m, registry)))
+    }
+    if (body.memo.nonEmpty) bodyObj.put("memo", body.memo)
+    if (body.timeoutHeight != 0) bodyObj.put("timeoutHeight", java.lang.Long.toUnsignedString(body.timeoutHeight))
+    val auth = tx.authInfo
+    val authObj = root.putObject("authInfo")
+    if (auth.signerInfos.nonEmpty) {
+      val arr = authObj.putArray("signerInfos")
+      auth.signerInfos.foreach { s =>
+        val obj = arr.addObject()
+        s.publicKey.foreach(pk => obj.set[JsonNode]("publicKey", anyTree(pk, registry)))
+        if (s.sequence != 0) obj.put("sequence", java.lang.Long.toUnsignedString(s.sequence))
+      }
+    }
+    auth.fee.foreach { fee =>
+      val obj = authObj.putObject("fee")
+      if (fee.amount.nonEmpty) coinsTree(obj.putArray("amount"), fee.amount)
+      if (fee.gasLimit != 0) obj.put("gasLimit", java.lang.Long.toUnsignedString(fee.gasLimit))
+      if (fee.payer.nonEmpty) obj.put("payer", fee.payer)
+      if (fee.granter.nonEmpty) obj.put("granter", fee.granter)
+    }
+    if (tx.signatures.nonEmpty) {
+      val arr = root.putArray("signatures")
+      tx.signatures.foreach(s => arr.add(Base64.getEncoder.encodeToString(s)))
+    }
+    root
   }
 }

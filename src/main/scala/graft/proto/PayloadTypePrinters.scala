@@ -8,7 +8,8 @@ package graft.proto
   *
   * Keys are typeUrl SUFFIXES (`"/cosmos.bank.v1beta1.MsgSend"`); values
   * render the decoded payload's JSON FIELDS (each prefixed with a comma —
-  * see [[CosmosTx.defaultRegistry]] for the shape). A printer that throws
+  * see [[CosmosTx.defaultRegistry]] for the shape). A printer that throws,
+  * or whose fragment does not complete the `Any` object as valid JSON,
   * falls back to the open-schema base64 rendering (payload isolation).
   */
 trait PayloadTypePrinters {

@@ -58,6 +58,54 @@ class ContractSpec extends AnyFunSuite {
     assert(builders.isEmpty, s"SparkSession built outside GraftSession: ${builders.mkString(", ")}")
   }
 
+  test("the engine calls dispatch-bench/src makes compile and run with the signatures it uses") {
+    // dispatch-bench builds the engine from source: an API change that
+    // breaks one of these calls fails the benchmark's build, so it must
+    // fail here first
+    import graft.functions.{DecodeCosmosTx, JsonPathExists, JsonPathLite, JsonPathRoutes}
+    import graft.operators.{ProtoTx, TxDispatchPipeline}
+    import graft.proto.CosmosTx
+    import graft.rules.TxDispatchRules
+    import graft.streaming.{AppConfig, DispatchApp}
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.{BinaryType, StringType, StructField, StructType}
+    import org.apache.spark.unsafe.types.UTF8String
+
+    val rules: TxDispatchRules = TxDispatchRules.fromYamlString(
+      "rules:\n  - name: \"body\"\n    topic: \"t-body\"\n    predicate: \"$.body\"\n")
+    val tx: CosmosTx.Tx = CosmosTx.decode(CosmosTx.encode(
+      CosmosTx.Tx(CosmosTx.TxBody(Nil, "", 0L), CosmosTx.AuthInfo(Nil, None), Nil)))
+    val raw: Array[Byte] = CosmosTx.encode(tx)
+    val json: String = CosmosTx.toJson(tx)
+    val paths: Seq[String] = rules.rules.map(_.predicate)
+    val routes = JsonPathRoutes(Literal(""), paths, Some(TxDispatchRules.ERROR), Some(TxDispatchRules.UNFILTERED))
+    assert(routes.routesFor(UTF8String.fromString(json)).toIntArray().toSeq == Seq(0))
+    assert(routes.routesFor(null: UTF8String).toIntArray().toSeq == Seq(TxDispatchRules.ERROR))
+    assert(JsonPathExists(Literal(""), paths.head).matchJson(UTF8String.fromString(json)))
+    assert(JsonPathLite.exists(new com.fasterxml.jackson.databind.ObjectMapper().readTree(json),
+      JsonPathLite.compile(paths.head)))
+
+    def frame(withJson: Boolean): DataFrame = spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(if (withJson) Row("k", raw, json) else Row("k", raw)), 1),
+      StructType(Seq(StructField("key", StringType), StructField("raw", BinaryType)) ++
+        (if (withJson) Seq(StructField("txJson", StringType)) else Nil)))
+    val decoded: DataFrame = ProtoTx.decoded(frame(withJson = false))
+    val cfg = AppConfig(bootstrapServers = "", topicIn = "", dlqTopic = "dlq", errorTopic = Some("error"),
+      rules = rules, checkpointDir = "")
+    val outs: Seq[DataFrame] = Seq(
+      TxDispatchPipeline.withRoutes(decoded, rules),
+      TxDispatchPipeline(frame(withJson = true), rules),
+      ProtoTx.routed(frame(withJson = false), rules),
+      DispatchApp.routedStream(frame(withJson = false).toDF("key", "raw"), cfg))
+    outs.foreach { df =>
+      assert(df.select("key", "route").collect().toSeq == Seq(Row("k", 0)), df.queryExecution.toString)
+    }
+    assert(outs.drop(1).forall(df => Seq("topic", "value").forall(df.columns.contains)))
+    assert(decoded.queryExecution.executedPlan.toString.contains(
+      new DecodeCosmosTx(Literal(null, BinaryType)).prettyName))
+  }
+
   // ---- exactness invariant (round-1 lesson: 6 hash failures came from
   // fp-aggregation / type drift the old checks couldn't see) ----
 

@@ -1,7 +1,8 @@
 package graft
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
+import graft.functions.JsonPathLite
 import graft.proto.{CosmosTx, ProtoWire}
 import graft.proto.CosmosTx._
 import org.scalacheck.{Gen, Prop, Test}
@@ -15,7 +16,8 @@ import scala.util.Try
   * renderer: strings over every ASCII char (quotes, backslashes, control
   * chars) plus non-ASCII and surrogate pairs, empty strings and zero
   * defaults, 0–3 messages of built-in, SPI, unknown and throwing payload
-  * types (with payload bytes that parse and bytes that do not), signer
+  * types (with payload bytes that parse and bytes that do not, and SPI
+  * fragments that are not valid JSON), signer
   * infos with and without keys, each fee field alone, uint64 values at and
   * above 2^63, and signatures.
   */
@@ -67,8 +69,10 @@ object TxGen {
     1 -> garbage.map(AnyMsg(MsgSendUrl, _)),
     2 -> bytes.map(k => AnyMsg(PubKeyUrl, new ProtoWire.Writer().bytes(1, k).toBytes)),
     1 -> garbage.map(AnyMsg(PubKeyUrl, _)),
-    // the test SPI printer copies its field verbatim: a JSON-safe amount
+    // the test SPI printer copies its field verbatim: a JSON-safe amount,
+    // or any string, whose quotes and control chars can break its fragment
     1 -> Gen.alphaNumStr.map(a => AnyMsg(MsgBurnUrl, new ProtoWire.Writer().string(1, a.take(10)).toBytes)),
+    1 -> str.map(a => AnyMsg(MsgBurnUrl, new ProtoWire.Writer().string(1, a).toBytes)),
     1 -> garbage.map(AnyMsg(MsgBurnUrl, _)),
     1 -> bytes.map(AnyMsg(ThrowUrl, _)),
     2 -> Gen.zip(Gen.oneOf("type.googleapis.com/unknown.v1.X", "/cosmos.bank.v1beta1.MsgSend",
@@ -97,13 +101,14 @@ object TxGen {
   } yield Tx(TxBody(msgs, memo, timeout), AuthInfo(signers, f), sigs)
 }
 
-/** The canonical JSON renderer against a document built independently
-  * with Jackson's tree API from the same `Tx`.
+/** The canonical JSON renderer and the tree builder, each against a
+  * document built independently with Jackson's tree API from the same `Tx`.
   */
 class CosmosTxJsonSpec extends AnyFunSuite {
   import TxGen._
 
   private val mapper = new ObjectMapper()
+  private val strict = new ObjectMapper().enable(DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
 
   private val params = Test.Parameters.default
     .withMinSuccessfulTests(20000).withInitialSeed(Seed(20261019L)).withWorkers(1)
@@ -138,9 +143,15 @@ class CosmosTxJsonSpec extends AnyFunSuite {
       }
       case "/cosmos.crypto.secp256k1.PubKey" =>
         Try(fields(a.value)).toOption.map(_.get(1).filter(_.nonEmpty).foreach(k => o.put("key", b64(k))))
+      // the printer writes `,"amount":"<amount>"` verbatim: its members
+      // join the object when they parse as JSON, else the payload is base64
       case "/testchain.v1.MsgBurn" =>
-        Try(fields(a.value)).toOption.map(_.get(1).filter(_.nonEmpty)
-          .foreach(v => o.put("amount", new String(v, "UTF-8"))))
+        Try(fields(a.value)).toOption.flatMap(_.get(1).filter(_.nonEmpty) match {
+          case None => Some(())
+          case Some(v) =>
+            Try(strict.readTree("{\"amount\":\"" + new String(v, "UTF-8") + "\"}")).toOption
+              .map(_.properties().forEach(e => o.set[JsonNode](e.getKey, e.getValue)))
+        })
       case _ => None
     }
   }
@@ -224,5 +235,54 @@ class CosmosTxJsonSpec extends AnyFunSuite {
     })
     // the generator must reach the fallback and the high uint64 branch
     assert(fallbacks > 1000 && unsignedHigh > 500, s"fallbacks=$fallbacks unsignedHigh=$unsignedHigh")
+  }
+
+  /** Rule sets shaped like the dispatch benchmark's, over the documents
+    * `TxGen` makes: `@type` discriminators, `==`/`in` groups, regexes,
+    * `..` scans, indices, slices, unions, `&&`/`||` filters and a
+    * never-matching path.
+    */
+  private val ruleSets: Seq[JsonPathLite.RuleSet] = Seq(
+    Seq(s"$$.body.messages[?(@.@type == '$MsgSendUrl')]",
+      "$..messages[?(@.fromAddress =~ /.*a.*/)]",
+      "$.nop",
+      "$.body[?(@.memo =~ /.*(a|b).*/i)]",
+      "$.authInfo.fee.amount[?(@.denom =~ /.+/)]",
+      "$.body.messages[1]",
+      s"$$.body.messages[?(@.@type in ['$MsgBurnUrl','$PubKeyUrl'])]",
+      "$..[?(@.toAddress)]"),
+    Seq(s"$$.body.messages[?(@.@type == '$MsgBurnUrl')]",
+      s"$$.body.messages[?(@.@type == '$ThrowUrl')]",
+      s"$$..publicKey[?(@.@type == '$PubKeyUrl')]",
+      "$..amount[?(@.denom == 'a')]",
+      "$..[?(@.amount)]",
+      "$..publicKey[?(@.key =~ /A.*/)]",
+      "$.authInfo.signerInfos[?(@.sequence in ['1','2','3'])]",
+      "$..signerInfos[?(@.sequence == '18446744073709551615')]",
+      "$.authInfo.fee['payer','granter']",
+      "$.authInfo.fee[?(@.gasLimit)]",
+      "$.body.messages[2:]",
+      "$.signatures[1]",
+      "$.body.timeoutHeight",
+      s"$$.body.messages[-1:][?(@.@type == '$MsgSendUrl')]",
+      "$.body.messages[?(@.value && @.@type =~ /.*MsgBurn/)]",
+      s"$$.body.messages[?(@.fromAddress == 'a' || @.@type == '$ThrowUrl')]",
+      "$..messages[?(@.amount[0].amount =~ /.+/)]",
+      "$.body.messages[0,1][?(@.value)]")).map(new JsonPathLite.RuleSet(_))
+
+  test("property: toTree equals the Jackson-built tree in field order, and every rule matches it as it matches the parse of toJson") {
+    var matched = 0
+    check(Prop.forAll(TxGen.tx) { tx =>
+      val tree = CosmosTx.toTree(tx, registry)
+      val want = expected(tx)
+      val parsed = mapper.readTree(CosmosTx.toJson(tx, registry))
+      val disagree = ruleSets.filter(rs => rs.matching(tree).toSeq != rs.matching(parsed).toSeq)
+      matched += ruleSets.map(_.matching(tree).length).sum
+      Prop(tree.toString == want.toString) :| s"got  $tree\nwant $want" &&
+        Prop(tree == parsed) :| s"tree $tree\nparse $parsed" &&
+        Prop(disagree.isEmpty) :| s"a rule set matches the tree and the parse differently: $tree"
+    })
+    // the rules must match often for the agreement to mean something
+    assert(matched > 20000, s"$matched matches")
   }
 }

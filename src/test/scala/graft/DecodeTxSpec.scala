@@ -13,7 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.util.Try
 
 /** `decode_tx` is total, gives each record exactly one of `error` and
-  * `txJson`, and its fields computed on read equal the eager ones.
+  * `txJson`, and its fields computed on read equal the direct `CosmosTx`
+  * calls; the routed plan over it agrees with and without codegen.
   */
 class DecodeTxSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -111,13 +112,17 @@ class DecodeTxSpec extends AnyFunSuite {
     val tx = TxGen.tx.pureApply(Gen.Parameters.default, Seed(1L))
     val row = expr.decode(CosmosTx.encode(tx))
     val lazyFields = row.getClass.getDeclaredFields.filter(f =>
-      Set("reencoded", "msgTypeUrls").exists(f.getName.endsWith))
-    assert(lazyFields.length == 2)
+      Set("txJson", "reencoded", "msgTypeUrls").exists(f.getName.endsWith))
+    assert(lazyFields.length == 3)
     lazyFields.foreach(_.setAccessible(true))
     (0 until 5).foreach(row.isNullAt)
     assert(lazyFields.forall(_.get(row) == null), "isNullAt forced a lazy field")
+    row.asInstanceOf[DecodedTxRow].tree
+    assert(lazyFields.forall(_.get(row) == null), "building the tree rendered or encoded")
     row.getBinary(1)
-    assert(lazyFields.count(_.get(row) == null) == 1, "getBinary(1) did not keep the re-encoding")
+    assert(lazyFields.count(_.get(row) == null) == 2, "getBinary(1) did not keep the re-encoding")
+    row.getUTF8String(0)
+    assert(lazyFields.count(_.get(row) == null) == 1, "getUTF8String(0) did not keep the rendering")
   }
 
   test("ProtoTx.decoded collects equal rows with and without code generation") {
@@ -147,6 +152,44 @@ class DecodeTxSpec extends AnyFunSuite {
       }
     // column 2 is txJson: both outcomes must be common
     assert(codegen.count(_(2) == null) > 50 && codegen.count(_(2) != null) > 50)
+    assert(codegen == interpreted)
+  }
+
+  test("ProtoTx.routed collects equal rows with and without code generation") {
+    import graft.rules.{DispatchRule, TxDispatchRules}
+    val rules = TxDispatchRules(Seq(
+      DispatchRule("send", "t-send", s"$$.body.messages[?(@.@type == '${TxGen.MsgSendUrl}')]"),
+      DispatchRule("key", "t-key", "$..publicKey[?(@.key)]"),
+      DispatchRule("burn-or-pubkey", "t-burn",
+        s"$$..[?(@.@type in ['${TxGen.MsgBurnUrl}','${TxGen.PubKeyUrl}'])]"),
+      DispatchRule("memo", "t-memo", "$.body[?(@.memo =~ /.*[aeiou].*/)]"),
+      DispatchRule("nop", "t-nop", "$.nop")))
+    val gen = Gen.listOfN(400, input).map(_.zipWithIndex.map { case (b, i) => (s"k$i", b) })
+    val recs = gen.pureApply(Gen.Parameters.default, Seed(6L))
+    import spark.implicits._
+    def collect(): Seq[Seq[Any]] =
+      ProtoTx.routed(spark.sparkContext.parallelize(recs, 2).toDF("key", "raw"), rules).collect().toSeq
+        .map(_.toSeq.map {
+          case a: Array[Byte] => a.toSeq
+          case s: scala.collection.Seq[_] => s.toSeq
+          case o => o
+        })
+    val codegen = collect()
+    val keys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+    val before = keys.map(k => k -> spark.conf.getOption(k))
+    val interpreted =
+      try {
+        spark.conf.set("spark.sql.codegen.wholeStage", "false")
+        spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+        collect()
+      } finally before.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    // column 7 is route: errors, DLQ records and rule matches must all be common
+    val routes = codegen.map(_(7).asInstanceOf[Int])
+    assert(routes.count(_ == TxDispatchRules.ERROR) > 30 && routes.count(_ == TxDispatchRules.UNFILTERED) > 30 &&
+      routes.count(_ >= 0) > 30, routes.groupBy(identity).map { case (r, n) => r -> n.size })
     assert(codegen == interpreted)
   }
 }

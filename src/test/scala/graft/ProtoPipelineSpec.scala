@@ -110,6 +110,35 @@ class ProtoPipelineSpec extends AnyFunSuite {
     assert(found.forall(_._2), s"a projection outside whole-stage codegen:\n$plan")
   }
 
+  test("the executed routed plan reads txJson only inside the UNFILTERED branch of value") {
+    import graft.functions.DecodeCosmosTx
+    import org.apache.spark.sql.catalyst.expressions.{CaseWhen, EqualTo, Expression, GetStructField, Literal}
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    val rows = spark.sparkContext.parallelize(Seq(("k1", tx1), ("k3", tx3), ("k4", txError)), 2)
+    val out = ProtoTx.routed(rows.toDF("key", "raw"), rules).select($"key", $"route", $"topic", $"value")
+    val plan = out.queryExecution.executedPlan
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    def readsTxJson(e: Expression): Boolean = e.exists {
+      case GetStructField(c, 0, _) => c.dataType == DecodeCosmosTx.schema
+      case _ => false
+    }
+    // every CASE branch taken on route = UNFILTERED, replaced by null
+    def outsideDlq(e: Expression): Expression = e.transformDown {
+      case CaseWhen(branches, elseValue) => CaseWhen(branches.map {
+        case (c @ EqualTo(_, Literal(UNFILTERED, _)), v) => (c, Literal(null, v.dataType))
+        case b => b
+      }, elseValue)
+    }
+    val exprs = nodes(plan).flatMap(_.expressions)
+    assert(exprs.exists(readsTxJson), s"no txJson read at all:\n$plan")
+    assert(!exprs.map(outsideDlq).exists(readsTxJson), s"txJson read outside the DLQ branch:\n$plan")
+    assert(out.collect().length == 3)
+  }
+
   test("msgCount matches the reference's logged messages.count()") {
     val got = ProtoTx.decoded(input)
       .select($"key", $"msgCount").as[(String, Option[Int])].collect().toMap

@@ -118,6 +118,30 @@ class RouteFilterPruningSpec extends AnyFunSuite {
       .exists(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Generate]))
   }
 
+  test("over ProtoTx.routed the pruned consumer Filter reads the decode struct, not txJson") {
+    import graft.functions.{DecodeCosmosTx, JsonPathExists}
+    import graft.operators.ProtoTx
+    import graft.proto.CosmosTx
+    import graft.proto.CosmosTx._
+    import graft.rules.{DispatchRule, TxDispatchRules}
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Generate}
+    import spark.implicits._
+    val url = "type.googleapis.com/cosmos.bank.v1beta1.MsgSend"
+    def tx(from: String): Array[Byte] = CosmosTx.encode(Tx(TxBody(Seq(
+      AnyMsg(url, encodeMsgSend(MsgSend(from, "to", Seq(Coin("know", "1")))))), "", 0L), AuthInfo(Nil, None), Nil))
+    val rules = TxDispatchRules(Seq(
+      DispatchRule("a", "topic-a", "$..messages[?(@.fromAddress == 'a')]"),
+      DispatchRule("b", "topic-b", "$..messages[?(@.fromAddress == 'b')]")))
+    val input = spark.sparkContext.parallelize(Seq(("k1", tx("a")), ("k2", tx("b")), ("k3", tx("a")),
+      ("k4", "junk".getBytes("UTF-8"))), 2).toDF("key", "raw")
+    val q = ProtoTx.routed(input, rules).filter($"topic" === "topic-a").select($"key", $"value")
+    val optimized = q.queryExecution.optimizedPlan
+    assert(!optimized.exists(_.isInstanceOf[Generate]), s"Generate survived:\n$optimized")
+    val tests = optimized.collect { case f: Filter => f.condition.collect { case e: JsonPathExists => e } }.flatten
+    assert(tests.nonEmpty && tests.forall(_.child.isInstanceOf[DecodeCosmosTx]), s"pruned filter:\n$optimized")
+    assert(q.as[(String, Array[Byte])].collect().map(_._1).sorted.toSeq == Seq("k1", "k3"))
+  }
+
   test("the shared session is the production session: GraftExtensions supplies the rule and the SQL functions") {
     assert(spark.experimental.extraOptimizations.isEmpty)
     val optimized = routes.filter(col("route") === 0).queryExecution.optimizedPlan

@@ -140,4 +140,22 @@ class SqlSurfaceSpec extends AnyFunSuite {
     assert(got == want)
     assert(got.nonEmpty)
   }
+
+  test("json_path_exists and json_path_routes refuse a document that is neither a string nor a decode_tx struct at analysis") {
+    import graft.functions.JsonPathFunctions.{json_path_exists, json_path_routes}
+    import graft.functions.ProtoFunctions.decode_tx
+    import org.apache.spark.sql.AnalysisException
+    import org.apache.spark.sql.functions.{col, lit}
+    val s = spark
+    import s.implicits._
+    graft.functions.JsonPathFunctions.register(s)
+    val e = intercept[AnalysisException](s.sql("SELECT json_path_exists(1, '$.a')").collect())
+    assert(e.getCondition == "DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE", e.getMessage)
+    val df = Seq(("{\"a\": 1}", Array[Byte](10, 0, 18, 0))).toDF("json", "raw")
+    val r = intercept[AnalysisException](df.select(json_path_routes(col("raw"), Seq("$.a"))).collect())
+    assert(r.getCondition == "DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE", r.getMessage)
+    // the two accepted document types
+    assert(df.select(json_path_exists(col("json"), "$.a"), json_path_exists(decode_tx(col("raw")), "$.body"),
+      json_path_exists(lit(null).cast("string"), "$.a")).head().toSeq == Seq(true, true, null))
+  }
 }
